@@ -225,8 +225,16 @@ def main() -> None:
         # wall-bounded: a round at the 6M default is ~40 min, and the
         # bench must leave room for the query/ann/code sections whatever
         # the host draws.
+        # Budget default 1800 s: a retry round may only start if it can fit
+        # the 3600 s wall the bench runs under. One 6M-payload round costs
+        # >= 2,300 s even in the fastest observed DRAM window, so at this
+        # input size 1800 s (< the minimum round duration) blocks exactly
+        # the retries that would be killed with nothing written (a 5400 s
+        # budget did that: round 1 took 2,760 s, the retry started, and the
+        # process died at 3,600 s). An exported SPARK_GRAFT_SCALE_BUDGET_S
+        # still wins.
         extra = 0
-        budget_s = float(os.environ.get("SPARK_GRAFT_SCALE_BUDGET_S", "5400"))
+        budget_s = float(os.environ.get("SPARK_GRAFT_SCALE_BUDGET_S", "1800"))
         while (
             (pick["efficiency"] < 0.8 or not _usable(pick))
             and extra < 2

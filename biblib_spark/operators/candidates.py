@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-
 def pairs_from_rid_lists(grouped: DataFrame, max_bucket: int) -> DataFrame:
     """(rids sorted-array) rows -> candidate pairs (a, b) with a < b.
 
@@ -41,7 +40,7 @@ def pairs_from_rid_lists(grouped: DataFrame, max_bucket: int) -> DataFrame:
     bucket exchange (r06 baseline event log, stage 111). Pair-set equality
     with the two-branch form: rids are sorted and unique within a bucket, so
     slicing past index i equals filtering on (x > rids[i]); pinned by the
-    strategy-identity tests in tests/test_dedupe_spark.py.
+    strategy-identity tests in tests/test_skew_and_detect.py.
     """
     grouped = grouped.filter(F.size("rids") > 1).select("rids")
     rids = F.col("rids")
@@ -120,57 +119,6 @@ def affix_keyed(feat: DataFrame, which: str, length: int) -> DataFrame:
     )
 
 
-def self_join_pairs_joined(
-    keyed: DataFrame, keys: list[str], max_bucket: int
-) -> DataFrame:
-    """Zero-object-aggregation twin of ``self_join_pairs``: identical pair
-    set, no ``collect_list`` anywhere.
-
-    Why: ``collect_list`` plans as ObjectHashAggregate, whose fallback
-    (default 128 in-memory entries) degenerates to a sort-based aggregation
-    of JAVA OBJECT rows — the flagship's event logs show that stage spilling
-    42-48 GB of execution memory and burning 1.7x more CPU-seconds at 32
-    cores than at 8 for identical work (bench_runs/r04/
-    stage_metrics_8c_32c.json, stage 46/111), the single largest
-    memory-bandwidth term in the job. Raising the fallback threshold OOMs
-    instead (ab_spill_aggfb1m.json, GCLocker retry storm).
-
-    Here every operator stays inside Tungsten whole-stage codegen:
-
-    1. bucket sizes + min rid via an ALGEBRAIC aggregation (count/min over
-       two longs — partial map-side combine, radix-sortable UnsafeRows,
-       no object buffers);
-    2. small buckets (<= max_bucket): pair expansion as a self-equi-join on
-       the bucket key with ``a < b`` as the join predicate — the shuffled
-       child is planned once and reused (ReusedExchange) for both sides;
-    3. oversize buckets: the same streamed star join as the salted path
-       (C7 — n-1 edges against the bucket's min rid, no task ever holds a
-       bucket).
-    """
-    kcols = [F.col(k) for k in keys]
-    sizes = (
-        keyed.groupBy(*kcols)
-        .agg(F.count(F.lit(1)).alias("n"), F.min("rid").alias("min_rid"))
-        .filter(F.col("n") > 1)
-    )
-
-    small_keys = sizes.filter(F.col("n") <= max_bucket).select(*keys)
-    small = keyed.join(small_keys, keys)
-    left = small.select(*keys, F.col("rid").alias("a"))
-    right = small.select(*keys, F.col("rid").alias("b"))
-    small_pairs = left.join(
-        right, [*(left[k] == right[k] for k in keys), F.col("a") < F.col("b")]
-    ).select("a", "b")
-
-    big_keys = sizes.filter(F.col("n") > max_bucket).select(*keys, "min_rid")
-    big_pairs = (
-        keyed.join(big_keys, keys)
-        .filter(F.col("rid") != F.col("min_rid"))
-        .select(F.col("min_rid").alias("a"), F.col("rid").alias("b"))
-    )
-    return small_pairs.unionByName(big_pairs)
-
-
 def self_join_pairs_salted(
     keyed: DataFrame, keys: list[str], max_bucket: int, salt: int = 16
 ) -> DataFrame:
@@ -223,45 +171,12 @@ def self_join_pairs_salted(
     return small_pairs.unionByName(big_pairs)
 
 
-def _group_keyed(tg: DataFrame, cfg) -> DataFrame:
-    """(year_key, bkey, rid=tgid) rows for the similarity tiers, one row set
-    per DISTINCT normalized title instead of per record."""
-    tiers = [
-        tg.select(
-            "year_key", F.explode("lsh_keys").alias("k"), F.col("tgid").alias("rid")
-        ).select(
-            "year_key", F.xxhash64(F.lit("lsh"), F.col("k")).alias("bkey"), "rid"
-        )
-    ]
-    if cfg.simhash_enabled:
-        tiers.append(
-            tg.select(
-                "year_key",
-                F.explode("simhash_keys").alias("k"),
-                F.col("tgid").alias("rid"),
-            ).select(
-                "year_key", F.xxhash64(F.lit("sim"), F.col("k")).alias("bkey"), "rid"
-            )
-        )
-    grouped_feat = tg.select(
-        "year_key", "norm_title", F.col("tgid").alias("rid")
-    )
-    if cfg.prefix_tier:
-        tiers.append(affix_keyed(grouped_feat, "prefix", cfg.prefix_len))
-    if cfg.suffix_tier:
-        tiers.append(affix_keyed(grouped_feat, "suffix", cfg.prefix_len))
-    keyed = tiers[0]
-    for t in tiers[1:]:
-        keyed = keyed.unionByName(t)
-    return keyed
-
-
 def flat_candidate_keys(feat: DataFrame, cfg) -> DataFrame:
     """ONE-SCAN tier-key generation: every tier's keys (identity, LSH band,
     SimHash quarter, affix) are built as conditional arrays in a single
     projection, concatenated, and exploded once — (year_key, bkey, rid) rows
     identical (as a multiset) to unioning one branch per tier, established by
-    tests/test_dedupe_spark.py's keyed-identity test.
+    tests/test_skew_and_detect.py's keyed-identity test.
 
     Why not a union of per-tier branches: each branch is a SEPARATE scan of
     the (spilled) feature table — with fine input splits that is thousands of
@@ -327,169 +242,36 @@ def flat_candidate_keys(feat: DataFrame, cfg) -> DataFrame:
     )
 
 
-def flat_candidate_pairs(feat: DataFrame, cfg) -> DataFrame:
-    """Single-shuffle tier union: every tier key is hashed into ONE int64
+def candidate_pairs(feat: DataFrame, cfg) -> DataFrame:
+    """All tiers unioned and deduped (C5). ``feat`` must carry
+    rid, year_key, doi, pmid, accession_number, norm_title, lsh_keys,
+    simhash_keys.
+
+    Single-shuffle tier union: every tier key is hashed into ONE int64
     ``bkey`` column (tier-salted xxhash64) per RECORD in a single scan
     (``flat_candidate_keys``), and all tiers share one self-join — one
     shuffle for bucket sizing, one for the pair dedup, instead of one per
     tier. Hash collisions across tiers only add candidates; verify keeps
-    precision exact.
-
-    This is the DEFAULT path: the candidate stage's cost at a given core
-    count is dominated by shuffle-stage latency (scheduler + AQE + barrier
-    per stage), not by keyed-row volume — measured at 3M records, the
-    grouped path's 6 extra stages scaled 0.28 from 8->32 cores while this
-    2-shuffle DAG's one big self-join scaled 3.8/4.
+    precision exact. The candidate stage's cost at a given core count is
+    dominated by shuffle-stage latency (scheduler + AQE + barrier per
+    stage), not by keyed-row volume: this 2-shuffle DAG's one big self-join
+    scaled 3.8/4 from 8->32 cores at 3M records.
     """
     keyed = flat_candidate_keys(feat, cfg)
     # no pre-distinct: (bucket, rid) rows are already unique within each tier
     # and the tier salt keeps them distinct across tiers
-    if cfg.salted_pairs:
-        gen = self_join_pairs_salted
-    elif getattr(cfg, "pair_strategy", "agg") == "join":
-        gen = self_join_pairs_joined
-    else:
-        gen = self_join_pairs
-    if getattr(cfg, "fused_bucket_key", True):
-        # year_key folded INTO the 64-bit bucket key: the keyed-row exchange
-        # is the pipeline's widest shuffle (~20 rows/record), and one long
-        # key instead of (int, long) narrows the row ~25% and makes the
-        # bucket groupBy a single-long radix sort/hash. A 2^-64 key
-        # collision can merge two buckets (including across year blocks) —
-        # candidates only; the verify predicate stays exact, the same
-        # negligible-collision budget the tier-salted xxhash64 keys above
-        # already spend.
-        keyed = keyed.select(
-            F.xxhash64("year_key", "bkey").alias("bkey"), "rid"
-        )
-        pairs = gen(keyed, ["bkey"], cfg.max_bucket)
-    else:
-        pairs = gen(keyed, ["year_key", "bkey"], cfg.max_bucket)
-    # C5: one verify per unordered pair (same pair can surface in many tiers)
-    return pairs.distinct()
-
-
-def candidate_pairs(feat: DataFrame, cfg) -> DataFrame:
-    """All tiers unioned and deduped (C5). ``feat`` must carry
-    rid, year_key, doi, norm_title, lsh_keys, simhash_keys.
-
-    Dispatches on ``cfg.title_grouping``: False (default) -> the
-    single-shuffle ``flat_candidate_pairs``; True -> the title-group path
-    below, worth its extra stages only when the exact-normalized-duplicate
-    factor is high (its win scales with records-per-distinct-title, its cost
-    is ~6 extra shuffle stages of core-count-independent latency).
-
-    Title-group path: records are first grouped by
-    (year_key, xxhash64(norm_title)). Every record of a group shares
-    IDENTICAL lsh/simhash/affix keys (they are pure functions of
-    norm_title), so the similarity tiers run over one representative per
-    group instead of per record: when most duplicates are
-    exact-normalized-content duplicates this collapses both the keyed-union
-    shuffle and the pair-dedup volume by the duplication factor. Tier
-    structure:
-
-    - within-group: all pairs of a title group (star-capped at max_bucket) —
-      subsumes the exact-title tier;
-    - cross-group: LSH band / SimHash quarter / affix keys over group
-      representatives -> distinct group pairs -> expanded to record pairs
-      (each side's members capped at max_bucket; beyond-cap members stay
-      reachable through the within-group star seed);
-    - identity (C1): record-keyed equi-join tiers as before (doi/pmid/accn
-      are NOT functions of the title).
-
-    A 64-bit title-hash collision can only MERGE two groups, which adds
-    candidates (verify keeps precision exact) and can hide the smaller
-    group's similarity keys (F.first) — at 10^12 rows the expected number of
-    colliding title pairs is ~30 globally, each still covered by the
-    within-group and identity tiers. Every tier key is hashed into ONE int64
-    ``bkey`` column (tier-salted xxhash64); hash collisions across tiers
-    only add candidates.
-    """
-    if not getattr(cfg, "title_grouping", False):
-        return flat_candidate_pairs(feat, cfg)
-    id_tiers = (
-        IDENTITY_TIERS if cfg.pmid_accession_tiers else IDENTITY_TIERS[:1]
-    )
-    id_pairs = (
-        self_join_pairs_salted if cfg.salted_pairs else self_join_pairs
-    )(identity_keyed(feat, id_tiers), ["year_key", "bkey"], cfg.max_bucket)
-
-    tkey = F.xxhash64(F.lit("tg"), F.col("norm_title"))
-    if cfg.salted_pairs:
-        # skew-hardened twin: no task ever materializes a whole title group.
-        # Group sizes via salted two-level agg; small groups collect bounded
-        # rid lists; oversize groups contribute (a) star pairs streamed
-        # through a row-at-a-time join and (b) their seed row to the
-        # similarity tiers (members beyond the seed reach clusters through
-        # the star edges).
-        keyed_t = feat.select("year_key", tkey.alias("bkey"), "rid")
-        wg_pairs = self_join_pairs_salted(
-            keyed_t, ["year_key", "bkey"], cfg.max_bucket
-        )
-        salted = keyed_t.groupBy(
-            "year_key", "bkey", F.pmod(F.xxhash64("rid"), F.lit(16)).alias("__s")
-        ).agg(F.count(F.lit(1)).alias("c"), F.min("rid").alias("m"))
-        sizes = salted.groupBy("year_key", "bkey").agg(
-            F.sum("c").alias("n"), F.min("m").alias("min_rid")
-        )
-        small_members = (
-            feat.select("year_key", tkey.alias("bkey"), "rid")
-            .join(
-                sizes.filter(F.col("n") <= cfg.max_bucket).select(
-                    "year_key", "bkey"
-                ),
-                ["year_key", "bkey"],
-            )
-            .groupBy("year_key", "bkey")
-            .agg(F.sort_array(F.collect_list("rid")).alias("rids"))
-        )
-        big_members = sizes.filter(F.col("n") > cfg.max_bucket).select(
-            "year_key", "bkey", F.array("min_rid").alias("rids")
-        )
-        members = small_members.unionByName(big_members).withColumn(
-            "tgid", F.col("rids")[0]
-        )
-        rep = feat.select(
-            "year_key",
-            tkey.alias("bkey"),
-            F.col("rid").alias("tgid"),
-            "norm_title",
-            "lsh_keys",
-            "simhash_keys",
-        ).join(members.select("year_key", "bkey", "tgid"), ["year_key", "bkey", "tgid"])
-        tg = rep.join(members.select("tgid", "rids"), "tgid")
-        gen = self_join_pairs_salted
-    else:
-        tg = (
-            feat.groupBy("year_key", tkey.alias("tkey"))
-            .agg(
-                F.sort_array(F.collect_list("rid")).alias("rids"),
-                F.first("norm_title").alias("norm_title"),
-                F.first("lsh_keys").alias("lsh_keys"),
-                F.first("simhash_keys").alias("simhash_keys"),
-            )
-            .withColumn("tgid", F.col("rids")[0])
-        )
-        wg_pairs = pairs_from_rid_lists(tg, cfg.max_bucket)
-        gen = self_join_pairs
-
-    # cross-group candidate pairs over group representatives
-    tg_pairs = gen(
-        _group_keyed(tg.filter(F.col("norm_title") != ""), cfg),
-        ["year_key", "bkey"],
-        cfg.max_bucket,
-    ).distinct()
-    mem = tg.select("tgid", F.slice("rids", 1, cfg.max_bucket).alias("mrids"))
-    cross_pairs = (
-        tg_pairs.join(
-            mem.select(F.col("tgid").alias("a"), F.col("mrids").alias("arids")), "a"
-        )
-        .join(mem.select(F.col("tgid").alias("b"), F.col("mrids").alias("brids")), "b")
-        .select(F.explode("arids").alias("x"), "brids")
-        .select("x", F.explode("brids").alias("y"))
-        .select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
-    )
-
-    pairs = wg_pairs.unionByName(id_pairs).unionByName(cross_pairs)
+    gen = self_join_pairs_salted if cfg.salted_pairs else self_join_pairs
+    # year_key folded INTO the 64-bit bucket key: the keyed-row exchange is
+    # the pipeline's widest shuffle (~20 rows/record), and one long key
+    # instead of (int, long) narrows the row ~25% and makes the bucket
+    # groupBy a single-long radix sort/hash. A 2^-64 key collision merges
+    # two buckets (including across year blocks). Usually that only adds
+    # candidates, which verify rejects — but if the merged bucket exceeds
+    # ``max_bucket`` it is star-capped, and every member of the bucket that
+    # does not hold the min rid loses its all-pairs edges: true pairs can
+    # be dropped (a recall loss; precision stays exact). The tier-salted
+    # xxhash64 keys above spend the same negligible-collision budget.
+    keyed = keyed.select(F.xxhash64("year_key", "bkey").alias("bkey"), "rid")
+    pairs = gen(keyed, ["bkey"], cfg.max_bucket)
     # C5: one verify per unordered pair (same pair can surface in many tiers)
     return pairs.distinct()

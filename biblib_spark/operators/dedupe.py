@@ -47,13 +47,6 @@ class DedupConfig:
     # members (boilerplate titles at 10^12-row scale); AQE handles the rest
     # locally, so the default favors the single-shuffle path
     salted_pairs: bool = False
-    # pair expansion inside each candidate bucket: "agg" collect_lists the
-    # bucket then double-explodes (one shuffle, but ObjectHashAggregate's
-    # sort fallback spills object rows — 42-48 GB at 10.2M records);
-    # "join" expands via a Tungsten self-equi-join with an algebraic
-    # size/min aggregation (no object buffers, exchange reused) — identical
-    # pair set (tests/test_dedupe_spark.py strategy-identity test)
-    pair_strategy: str = "agg"
     # C1 pmid/accession identity tiers (DOI is always on). Separately
     # switchable so recall harnesses can prove the SIMILARITY tiers'
     # coverage without registry-identifier shortcuts
@@ -63,13 +56,6 @@ class DedupConfig:
     # redundant while LSH is on (identical normalized titles -> identical
     # signatures -> same band buckets); enable when LSH is configured off
     exact_title_tier: bool = False
-    # collapse records into (year, norm_title) groups before the similarity
-    # tiers — wins when the exact-normalized-dup factor is high (its saving
-    # scales with records-per-distinct-title), loses otherwise (~6 extra
-    # shuffle stages of core-count-independent latency; measured 0.28
-    # scaling efficiency 8->32 cores at 1.7 records/title vs 0.95 for the
-    # flat path's single big self-join)
-    title_grouping: bool = False
     # C4 containment: candidate admission on the first/last prefix_len chars
     # of norm_title, plus a substring verify arm for pairs whose jaro falls
     # below the reference thresholds (truncated/decorated titles)
@@ -78,15 +64,6 @@ class DedupConfig:
     prefix_len: int = 24
     containment_verify: bool = True
     containment_min_len: int = 20
-    # one 64-bit bucket key (year_key folded into bkey) for the widest
-    # shuffle — see candidates.flat_candidate_pairs
-    fused_bucket_key: bool = True
-    # broadcast the narrow verify side instead of shuffling every candidate
-    # pair through two sort-merge joins. Measured a LOSS on the r06 box
-    # (189.3 vs 154.8 s at 7.65M records — hash-relation build/probe beats
-    # the saved exchanges only on bandwidth-rich hardware), so default OFF;
-    # row-count gate, 0 disables.
-    broadcast_verify_rows: int = 0
 
 
 # columns dedupe_records expects on its input; pmid / accession_number are
@@ -203,21 +180,11 @@ def dedupe_features(feat: DataFrame, cfg: DedupConfig | None = None) -> DataFram
     """Preprocessed+materialized features -> (rid, cluster_id, is_unique, source)."""
     cfg = cfg or DedupConfig()
     pairs = candidate_pairs(feat, cfg)
-    limit = getattr(cfg, "broadcast_verify_rows", 0)
-    broadcast_narrow = False
-    if limit:
-        try:
-            # feat arrives materialized (parquet spill / localCheckpoint),
-            # so count() is metadata/block-scan cheap — no recompute
-            broadcast_narrow = feat.count() <= limit
-        except Exception:
-            broadcast_narrow = False
     dup_edges = verify_pairs(
         pairs,
         feat,
         containment=cfg.containment_verify,
         containment_min_len=cfg.containment_min_len,
-        broadcast_narrow=broadcast_narrow,
     )
     clustered = assign_clusters(feat.select("rid"), dup_edges)
     enriched = clustered.join(
@@ -362,6 +329,13 @@ def features_from_corpus(
                 if parser is None:
                     continue
                 citations, _errors = parser(text)
+                if len(citations) > shift:
+                    # rid = row_id * shift + idx would alias the next payload
+                    raise ValueError(
+                        f"payload row_id={row_id} yields {len(citations)} "
+                        f"citations, more than record_idx_bits="
+                        f"{record_idx_bits} can address"
+                    )
                 for idx, c in enumerate(citations):
                     nt = normalize_title(c["title"] or "") or ""
                     year = c["date"]["year"] if c["date"] else None
@@ -426,28 +400,20 @@ def dedupe_corpus(
     corpus: DataFrame,
     cfg: DedupConfig | None = None,
     source_col: str | None = None,
-    materialize: str = "parquet",
 ) -> DataFrame:
     """Corpus table -> clusters via the fused fast path.
 
-    ``materialize`` picks how the feature table (which fans out nine ways —
-    six candidate tiers, two verify sides, the election join) is pinned:
-
-    - ``"parquet"`` (default): columnar spill on the shuffle-local dir
-      (plans/spill.py) — each consumer prunes to the columns it reads
-      (the tiers read 8 of 16, the election join 4), where a checkpoint
-      hands every branch every column;
-    - ``"checkpoint"``: ``localCheckpoint`` block-manager materialization
-      (no temp files — used by tests that run many tiny pipelines).
+    The feature table fans out to the candidate-key scan, both verify joins
+    and the election join, so it is pinned once as a columnar parquet spill
+    on the shuffle-local dir (plans/spill.py): each consumer prunes to the
+    columns it reads (the key scan reads 8 of 16, the election join 4),
+    where a checkpoint would hand every branch every column.
     """
+    from biblib_spark.plans.spill import spill_to_parquet
+
     cfg = cfg or DedupConfig()
     feat = features_from_corpus(corpus, cfg, source_col=source_col)
-    if materialize == "parquet":
-        from biblib_spark.plans.spill import spill_to_parquet
-
-        feat, _ = spill_to_parquet(feat, "dedup-features")
-    else:
-        feat = feat.localCheckpoint(eager=True)
+    feat, _ = spill_to_parquet(feat, "dedup-features")
     return dedupe_features(feat, cfg)
 
 
@@ -460,7 +426,8 @@ def records_from_parsed(
 
     rid = row_id << record_idx_bits | record_idx keeps the reference's input
     order (payload order, then record order within the payload) so election
-    tie-breaks match. Requires record_idx < 2^record_idx_bits; at 10^12 rows
+    tie-breaks match. Requires record_idx < 2^record_idx_bits (a larger one
+    raises instead of aliasing the next payload's rids); at 10^12 rows
     switch rid to a 128-bit (two-long) key. ``source_col`` (M12): column on
     ``parsed`` carrying the per-payload source register.
     """
@@ -470,8 +437,19 @@ def records_from_parsed(
         if source_col is not None
         else F.lit(None).cast("string")
     )
+    idx = F.col("record_idx")
+    rid = F.when(
+        idx >= 1 << record_idx_bits,
+        F.raise_error(
+            F.concat(
+                F.lit("record_idx "),
+                idx.cast("string"),
+                F.lit(f" does not fit record_idx_bits={record_idx_bits}"),
+            )
+        ),
+    ).otherwise(F.col("row_id") * (1 << record_idx_bits) + idx)
     return parsed.select(
-        (F.col("row_id") * (1 << record_idx_bits) + F.col("record_idx")).alias("rid"),
+        rid.alias("rid"),
         src.alias("source"),
         c["title"].alias("title"),
         c["journal"].alias("journal"),

@@ -172,8 +172,6 @@ def verify_pairs(
     feat: DataFrame,
     containment: bool = False,
     containment_min_len: int = 20,
-    narrow_first: bool = True,
-    broadcast_narrow: bool = False,
 ) -> DataFrame:
     """Candidate pairs (a, b) -> verified duplicate pairs (a, b).
 
@@ -182,8 +180,7 @@ def verify_pairs(
     arm for truncated/containment duplicates the reference's jaro thresholds
     miss (gated by DedupConfig.containment_verify in the pipeline).
 
-    ``narrow_first`` (default, pair-set-identical by tests/test_verify.py)
-    splits verification into two joins:
+    Verification runs as two joins:
 
     1. NARROW: pairs join only (rid, norm_title, doi) per side — the title
        similarity is computed once here and a pair survives only if its sim
@@ -198,20 +195,13 @@ def verify_pairs(
        field-match corroborations (journal/issn/volume/pages/year).
 
     Both stages evaluate the identical predicate pieces, so the output is
-    exactly the single-join plan's — only the shuffle payload moves.
+    exactly a single join's over the full feature rows — only the shuffle
+    payload moves (pair-set identity pinned by tests/test_verify.py).
+    Broadcasting the narrow sides instead of shuffling them measured a loss
+    (189.3 vs 154.8 s at 7.65M records): building and probing two ~700 MB
+    hash relations costs more DRAM traffic than the sort-merge exchanges it
+    removes.
     """
-    if not narrow_first:
-        j = _join_sides(pairs, feat)
-        m = _field_matches()
-        both_doi, doi_eq = _doi_presence()
-        sim = _title_sim_udf(
-            F.col("a_norm_title"), F.col("b_norm_title"), both_doi
-        )
-        is_dup = _arm_predicate(sim, m, both_doi, doi_eq)
-        if containment:
-            is_dup = is_dup | _containment_arm(m, containment_min_len)
-        return j.filter(is_dup).select("a", "b")
-
     # Stage 1 (NARROW): pairs join only (rid, norm_title, doi) per side.
     # The round-5 bonus commit routed pairs through an even narrower
     # 128-bit title-fingerprint join first so equal-title pairs never carry
@@ -224,16 +214,9 @@ def verify_pairs(
     # inside the sim UDF (vectorized a != b mask; equal rows skip the block
     # kernel), so the narrow join carries the titles directly.
     narrow = feat.select("rid", "norm_title", "doi")
-    side_a, side_b = _side_cols(narrow, "a"), _side_cols(narrow, "b")
-    if broadcast_narrow:
-        # measured a LOSS on the r06 box (189.3 s vs 154.8 s at 7.65M
-        # records): building + probing two ~700 MB hash relations costs
-        # more DRAM traffic than the two sort-merge exchanges it removes.
-        # Kept as an opt-in for genuinely skew-free small-feature cases.
-        side_a, side_b = F.broadcast(side_a), F.broadcast(side_b)
     j1 = (
-        pairs.join(side_a, pairs["a"] == F.col("a_rid"))
-        .join(side_b, pairs["b"] == F.col("b_rid"))
+        pairs.join(_side_cols(narrow, "a"), pairs["a"] == F.col("a_rid"))
+        .join(_side_cols(narrow, "b"), pairs["b"] == F.col("b_rid"))
     )
     both_doi, doi_eq = _doi_presence()
     # exact per-pair minimum any arm could accept

@@ -11,27 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-_GC_OPTS = os.environ.get(
-    "SPARK_GRAFT_JAVA_OPTS",
-    "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100",
-)
-
-# Default the bench's scaling-retry wall budget (round-5 verdict ask #1:
-# "reserve room - don't start a retry round unless it fits the driver
-# wall"). bench.py reads SPARK_GRAFT_SCALE_BUDGET_S *after* importing this
-# module and starts an extra paired round while elapsed < budget; its
-# shipped default (5400 s) exceeds the 3600 s harness wall, so on any
-# evening where round 1 reads efficiency < 0.8 the ladder starts a ~45-min
-# retry it can never finish and the whole artifact is lost (r05's rc-124,
-# reproduced this round: round 1 took 2,760 s, the retry began inside the
-# 5400 s budget, and the process was killed at 3,600 s with nothing
-# written). One 6M-payload round costs >= 2,300 s even in the fastest
-# observed DRAM window, so no retry can EVER fit the harness wall at this
-# input size: 1800 s (< minimum round duration) blocks exactly the retries
-# that would be fatal. An explicitly exported SPARK_GRAFT_SCALE_BUDGET_S
-# still wins (setdefault), and every round that does run stays in the
-# artifact unchanged.
-os.environ.setdefault("SPARK_GRAFT_SCALE_BUDGET_S", "1800")
+# JVM flags for the driver and executors (rationale at their conf lines)
+_GC_OPTS = "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100"
 
 
 def get_spark(
@@ -42,16 +23,12 @@ def get_spark(
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
-        env_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS")
-        if env_parts is not None:
-            shuffle_partitions = int(env_parts)
-        else:
-            # one wave per core: this pipeline runs MANY small-to-medium
-            # shuffle stages (tier union, verify joins, CC rounds), where
-            # per-task dispatch latency outweighs straggler smoothing; AQE
-            # re-splits any stage that actually skews. On a real cluster
-            # with deep stages, raise toward 2-3x total cores.
-            shuffle_partitions = max(cores, 16)
+        # one wave per core: this pipeline runs MANY small-to-medium shuffle
+        # stages (tier union, verify joins, CC rounds), where per-task
+        # dispatch latency outweighs straggler smoothing; AQE re-splits any
+        # stage that actually skews. On a real cluster with deep stages,
+        # raise toward 2-3x total cores.
+        shuffle_partitions = max(cores, 16)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -60,20 +37,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # advisory post-shuffle partition size: at 64m AQE coalesces a
         # ~256 MB pair-dedup shuffle to ~4 reduce tasks — fine on 8 cores,
-        # starves 32 (SPARK_GRAFT_ADVISORY_MB overrides for A/B runs)
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_MB", "64") + "m",
-        )
+        # starves 32
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # when set, shuffles START at this many partitions and AQE coalesces
-        # each stage down to the advisory size — the idiomatic way to give
-        # huge aggregations more (smaller, spill-free) tasks without slowing
-        # the many small stages (A/B knob; see scripts/ab_partitions.py)
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTS", str(shuffle_partitions)),
-        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # payloads can be multi-KB; 8192 rows/batch keeps per-batch memory
         # in the tens of MB while quartering the JVM<->Python Arrow
@@ -110,17 +76,10 @@ def get_spark(
         # records, an OOM on a tmpfs local dir. The checkpoint discipline
         # makes each stage's shuffles garbage as soon as the next checkpoint
         # lands, so a 60 s periodic GC caps the live set at ~one stage
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "60s"),
-        )
-        # shuffle/spill codec: on a memory-bandwidth-bound box (see
-        # scripts/mem_probe.py) a denser codec trades ALU for DRAM traffic —
-        # A/B knob; lz4 is the Spark default
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "60s")
+        # shuffle/spill codec: lz4, the Spark default, pinned so a cluster
+        # default cannot swap it
+        .config("spark.io.compression.codec", "lz4")
         # G1's GCLocker allocation-retry default (2) turns JNI critical
         # sections (lz4 codec, Arrow) into allocation-stall storms whenever
         # Tungsten asks for a 16-128 MiB humongous region while the locker
@@ -153,10 +112,7 @@ def get_spark(
         # the numpy/pandas import (~0.5 s/task), flooring short Python
         # stages (measured: sf0.1 near-dup query 6.1 s with reuse off vs
         # ~2 s on; flagship indifferent — 259.1 vs 259.7 s).
-        .config(
-            "spark.python.worker.reuse",
-            os.environ.get("SPARK_GRAFT_WORKER_REUSE", "true"),
-        )
+        .config("spark.python.worker.reuse", "true")
         .config("spark.speculation", "true")
         .config("spark.speculation.multiplier", "4")
         .config("spark.speculation.quantile", "0.75")

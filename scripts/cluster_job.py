@@ -96,21 +96,7 @@ def main() -> None:
         if os.path.isdir("/dev/shm"):
             os.environ["SPARK_LOCAL_DIRS"] = "/dev/shm/spark-local,/tmp/spark-local"
 
-    # A/B toggles (defaults match the shipped DedupConfig)
-    cfg = DedupConfig(
-        title_grouping=os.environ.get("SPARK_GRAFT_TITLE_GROUPING", "0") == "1",
-        salted_pairs=os.environ.get("SPARK_GRAFT_SALTED_PAIRS", "0") == "1",
-        pair_strategy=os.environ.get(
-            "SPARK_GRAFT_PAIR_STRATEGY", DedupConfig.pair_strategy
-        ),
-        fused_bucket_key=os.environ.get("SPARK_GRAFT_FUSED_KEY", "1") == "1",
-        broadcast_verify_rows=int(
-            os.environ.get(
-                "SPARK_GRAFT_BCAST_VERIFY",
-                str(DedupConfig.broadcast_verify_rows),
-            )
-        ),
-    )
+    cfg = DedupConfig()
 
     spark = get_spark(f"cluster_job_{cores}", cores=cores)
     # Coarse input splits for THIS job only (guide §6: fewer, larger map

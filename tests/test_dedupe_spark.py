@@ -283,3 +283,29 @@ def test_recall_vs_reference_on_synthetic_corpus(spark):
     assert recall_sim >= 0.99, (
         f"similarity-tier recall {recall_sim:.4f} < 0.99 (no pmid/accession)"
     )
+
+
+def test_rid_overflow_raises_instead_of_colliding(spark):
+    """rid = row_id * 2^bits + record_idx: a payload with more records than
+    2^bits would alias the next payload's rids, so both rid builders raise."""
+    from biblib_spark.operators.dedupe import (
+        features_from_corpus,
+        records_from_parsed,
+    )
+    from biblib_spark.sources.parse import parse_corpus
+
+    payload = "".join(
+        f"TY  - JOUR\nTI  - Renal outcomes study number {i}\nPY  - 2001\nER  - \n\n"
+        for i in range(3)
+    )
+    corpus = spark.createDataFrame([(0, payload)], "row_id long, content string")
+    assert parse_corpus(corpus).count() == 3
+
+    with pytest.raises(Exception, match="record_idx_bits=1"):
+        features_from_corpus(corpus, record_idx_bits=1).collect()
+    with pytest.raises(Exception, match="record_idx_bits=1"):
+        records_from_parsed(parse_corpus(corpus), record_idx_bits=1).collect()
+    # two records fit in one bit: no error, distinct rids
+    assert records_from_parsed(
+        parse_corpus(corpus).filter("record_idx < 2"), record_idx_bits=1
+    ).count() == 2

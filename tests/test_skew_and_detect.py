@@ -177,49 +177,6 @@ def test_dedupe_with_salted_pairs_matches_default(spark):
     }
 
 
-def test_joined_pair_generation_identical(spark):
-    """pair_strategy="join": the Tungsten self-join expansion must produce
-    EXACTLY the pairs of the collect_list path — all pairs for small
-    buckets, star pairs to the bucket min for oversize ones — with zero
-    object aggregation in the plan."""
-    from biblib_spark.operators.candidates import (
-        self_join_pairs,
-        self_join_pairs_joined,
-    )
-
-    rows = []
-    rows += [(0, 1, i) for i in range(300)]  # mega bucket -> star cap
-    rows += [(0, 2, 1000 + i) for i in range(10)]  # medium -> all pairs
-    rows += [(0, 3, 2000)]  # singleton -> nothing
-    rows += [(7, 1, 3000 + i) for i in range(3)]  # same bkey, other year
-    keyed = spark.createDataFrame(rows, "year_key int, bkey long, rid long")
-
-    base = {
-        (r.a, r.b)
-        for r in self_join_pairs(keyed, ["year_key", "bkey"], 64).collect()
-    }
-    joined_df = self_join_pairs_joined(keyed, ["year_key", "bkey"], 64)
-    joined = {(r.a, r.b) for r in joined_df.collect()}
-    assert joined == base
-    assert (0, 299) in joined
-    assert (1000, 1009) in joined
-    # no ObjectHashAggregate anywhere in the physical plan
-    plan = joined_df._jdf.queryExecution().executedPlan().toString()
-    assert "ObjectHashAggregate" not in plan
-
-
-def test_dedupe_with_joined_pairs_matches_default(spark):
-    from biblib_spark.corpus import make_corpus
-    from biblib_spark.operators.dedupe import DedupConfig, dedupe_corpus
-
-    corpus = make_corpus(spark, 80, seed=17)
-    a = dedupe_corpus(corpus, DedupConfig()).collect()
-    b = dedupe_corpus(corpus, DedupConfig(pair_strategy="join")).collect()
-    assert {(r.rid, r.cluster_id, r.is_unique) for r in a} == {
-        (r.rid, r.cluster_id, r.is_unique) for r in b
-    }
-
-
 def test_prefix_tier_catches_truncation_pairs(spark):
     """C4: a truncated-title duplicate whose band hashes diverge is still
     found through the shared-prefix bucket + the jaro>=0.85 DOI arm."""
