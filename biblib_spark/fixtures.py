@@ -59,70 +59,45 @@ E2E_SIM = os.path.join(E2E_DIR, "sim.parquet")
 E2E_PAYLOADS, E2E_RPP, E2E_SEED = 200, 6, 42
 
 
+def _features(n_payloads: int, rpp: int, seed: int) -> pa.Table:
+    """The pipeline's feature rows (kernels/features.py, DedupConfig()) for
+    every parsed citation of the synthetic corpus, in rid order."""
+    import pyarrow as pa
+
+    from biblib_spark.corpus import payload_format, payload_text
+    from biblib_spark.kernels.features import FeatureRows
+    from biblib_spark.operators.dedupe import DedupConfig
+    from biblib_spark.sources.parse import PARSERS
+
+    rows = FeatureRows(DedupConfig())  # the defaults dedupe_records runs with
+    for p in range(n_payloads):
+        fmt = payload_format(p)
+        citations, errors = PARSERS[fmt](payload_text(p, rpp, seed))
+        assert not errors
+        for idx, c in enumerate(citations):
+            rows.add_citation(p * SHIFT + idx, fmt, c)
+    return pa.Table.from_batches([rows.finish()])
+
+
 def _build_frames():
     import pandas as pd
 
-    from biblib_spark.corpus import (
-        SLOTS_PER_WORK,
-        n_variants,
-        payload_format,
-        payload_text,
-    )
-    from biblib_spark.kernels.norm import (
-        format_issn,
-        format_journal_name,
-        normalize_title,
-        normalize_volume,
-    )
-    from biblib_spark.sources.parse import PARSERS
+    from biblib_spark.corpus import SLOTS_PER_WORK, n_variants
 
-    rows = []
-    for p in range(N_PAYLOADS):
-        fmt = payload_format(p)
-        citations, errors = PARSERS[fmt](payload_text(p, RPP, SEED))
-        assert not errors
-        works = [
-            slot // SLOTS_PER_WORK
-            for slot in range(p * RPP, (p + 1) * RPP)
-            if slot % SLOTS_PER_WORK < n_variants(slot // SLOTS_PER_WORK, SEED)
-        ]
-        assert len(works) == len(citations)
-        for idx, (c, w) in enumerate(zip(citations, works)):
-            nt = normalize_title(c["title"] or "") or ""
-            year = c["date"]["year"] if c["date"] else None
-            rows.append(
-                {
-                    "rid": p * SHIFT + idx,
-                    "source": fmt,
-                    "doi": c["doi"],
-                    "pmid": c["pmid"],
-                    "accession_number": c["accession_number"],
-                    "year": year,
-                    "pages": c["pages"],
-                    "abstract_text": "x" if c["abstract_text"] is not None else None,
-                    "norm_title": nt,
-                    "norm_journal": (
-                        format_journal_name(c["journal"])
-                        if c["journal"] is not None
-                        else None
-                    ),
-                    "norm_journal_abbr": (
-                        format_journal_name(c["journal_abbr"])
-                        if c["journal_abbr"] is not None
-                        else None
-                    ),
-                    "norm_volume": (
-                        normalize_volume(c["volume"]) if c["volume"] is not None else ""
-                    ),
-                    "norm_issn": [
-                        f
-                        for f in (format_issn(v) for v in c["issn"] or [])
-                        if f is not None
-                    ],
-                    "year_key": year if year is not None else 0,
-                    "work_id": w,
-                }
-            )
+    rows = (
+        _features(N_PAYLOADS, RPP, SEED)
+        .drop_columns(["lsh_keys", "simhash_keys"])
+        .to_pylist()
+    )
+    # (payload, work) of every generated citation slot, in rid order
+    works = [
+        (slot // RPP, slot // SLOTS_PER_WORK)
+        for slot in range(N_PAYLOADS * RPP)
+        if slot % SLOTS_PER_WORK < n_variants(slot // SLOTS_PER_WORK, SEED)
+    ]
+    assert [p for p, _ in works] == [r["rid"] // SHIFT for r in rows]
+    for r, (_, w) in zip(rows, works):
+        r["work_id"] = w
 
     # C4 containment rows: head-truncated copies whose jaro to the source
     # falls below every reference threshold — only the substring arm links
@@ -162,130 +137,25 @@ def _build_e2e(tmp: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from biblib_spark.corpus import payload_format, payload_text
-    from biblib_spark.functions.minhash import _perm_params, lsh_keys_batch
-    from biblib_spark.functions.simhash import simhash64
-    from biblib_spark.kernels.norm import (
-        format_issn,
-        format_journal_name,
-        normalize_title,
-        normalize_volume,
-    )
-    from biblib_spark.operators.dedupe import DedupConfig
-    from biblib_spark.sources.parse import PARSERS
-
-    cfg = DedupConfig()  # the defaults dedupe_records runs with
-    rows = []
-    for p in range(E2E_PAYLOADS):
-        fmt = payload_format(p)
-        citations, errors = PARSERS[fmt](payload_text(p, E2E_RPP, E2E_SEED))
-        assert not errors
-        for idx, c in enumerate(citations):
-            nt = normalize_title(c["title"] or "") or ""
-            year = c["date"]["year"] if c["date"] else None
-            rows.append(
-                {
-                    "rid": p * SHIFT + idx,
-                    "doi": c["doi"],
-                    "pmid": c["pmid"],
-                    "accession_number": c["accession_number"],
-                    "year": year,
-                    "pages": c["pages"],
-                    "abstract_text": (
-                        "x" if c["abstract_text"] is not None else None
-                    ),
-                    "norm_title": nt,
-                    "norm_journal": (
-                        format_journal_name(c["journal"])
-                        if c["journal"] is not None
-                        else None
-                    ),
-                    "norm_journal_abbr": (
-                        format_journal_name(c["journal_abbr"])
-                        if c["journal_abbr"] is not None
-                        else None
-                    ),
-                    "norm_volume": (
-                        normalize_volume(c["volume"])
-                        if c["volume"] is not None
-                        else ""
-                    ),
-                    "norm_issn": [
-                        f
-                        for f in (format_issn(v) for v in c["issn"] or [])
-                        if f is not None
-                    ],
-                    "year_key": year if year is not None else 0,
-                }
-            )
-
-    feat_schema = pa.schema(
-        [
-            ("rid", pa.int64()),
-            ("doi", pa.string()),
-            ("pmid", pa.string()),
-            ("accession_number", pa.string()),
-            ("year", pa.int32()),
-            ("pages", pa.string()),
-            ("abstract_text", pa.string()),
-            ("norm_title", pa.string()),
-            ("norm_journal", pa.string()),
-            ("norm_journal_abbr", pa.string()),
-            ("norm_volume", pa.string()),
-            ("norm_issn", pa.list_(pa.string())),
-            ("year_key", pa.int32()),
-        ]
-    )
+    feat = _features(E2E_PAYLOADS, E2E_RPP, E2E_SEED)
     pq.write_table(
-        pa.table(
-            {
-                f.name: pa.array([r[f.name] for r in rows], f.type)
-                for f in feat_schema
-            },
-            schema=feat_schema,
-        ),
+        feat.drop_columns(["source", "lsh_keys", "simhash_keys"]),
         os.path.join(tmp, "features.parquet"),
     )
-
-    # similarity-tier keys via the SAME kernel calls as dedupe.preprocess /
-    # features_from_corpus at the DedupConfig() contract config
-    a, b = _perm_params(cfg.num_perm, cfg.minhash_seed)
-    lsh = lsh_keys_batch(
-        [r["norm_title"] for r in rows], cfg.shingle_k, a, b, cfg.bands
-    )
-    lsh_rows = [
-        (r["rid"], r["year_key"], int(k)) for r, ks in zip(rows, lsh) for k in ks
-    ]
-    pq.write_table(
-        pa.table(
-            {
-                "rid": pa.array([x[0] for x in lsh_rows], pa.int64()),
-                "year_key": pa.array([x[1] for x in lsh_rows], pa.int32()),
-                "k": pa.array([x[2] for x in lsh_rows], pa.int64()),
-            }
-        ),
-        os.path.join(tmp, "lsh.parquet"),
-    )
-
-    sim_rows = []
-    for r in rows:
-        nt = r["norm_title"]
-        if cfg.simhash_enabled and nt and len(nt) <= cfg.simhash_max_title:
-            h = simhash64(nt, cfg.shingle_k)
-            for q in range(4):
-                sim_rows.append(
-                    (r["rid"], r["year_key"], q << 16 | ((h >> (16 * q)) & 0xFFFF))
-                )
-    pq.write_table(
-        pa.table(
-            {
-                "rid": pa.array([x[0] for x in sim_rows], pa.int64()),
-                "year_key": pa.array([x[1] for x in sim_rows], pa.int32()),
-                "k": pa.array([x[2] for x in sim_rows], pa.int64()),
-            }
-        ),
-        os.path.join(tmp, "sim.parquet"),
-    )
+    # similarity-tier keys, one (rid, year_key, k) row per key
+    rows = feat.select(["rid", "year_key", "lsh_keys", "simhash_keys"]).to_pylist()
+    for name, col in (("lsh.parquet", "lsh_keys"), ("sim.parquet", "simhash_keys")):
+        keyed = [(r["rid"], r["year_key"], k) for r in rows for k in r[col]]
+        pq.write_table(
+            pa.table(
+                {
+                    "rid": pa.array([x[0] for x in keyed], pa.int64()),
+                    "year_key": pa.array([x[1] for x in keyed], pa.int32()),
+                    "k": pa.array([x[2] for x in keyed], pa.int64()),
+                }
+            ),
+            os.path.join(tmp, name),
+        )
 
 
 def ensure_e2e_fixture() -> str:

@@ -1,21 +1,30 @@
-"""End-to-end resumable pipeline: corpus -> parse -> dedupe -> clusters.
+"""End-to-end resumable pipeline: corpus -> features -> clusters.
 
 Stages checkpoint to ``work_dir`` with _STAGE_OK markers (C8); re-running
 with the same work_dir resumes after the last completed stage. The lineage
-entry records an order-insensitive aggregate of the input content hashes so
-a resume against different input is detectable.
+entry records an order-insensitive aggregate of the input content hashes,
+the DedupConfig and the source column, so a resume against different input
+or a different config is detectable.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from biblib_spark.operators.dedupe import DedupConfig, dedupe_records, records_from_parsed
+from biblib_spark.operators.dedupe import (
+    DedupConfig,
+    dedupe_features,
+    features_from_corpus,
+)
 from biblib_spark.plans.checkpoint import run_stage
-from biblib_spark.sources.parse import parse_with_diagnostics, split_diagnostics
+
+# unused here, kept importable: perfbench's trace_targets("resume") patches them
+from biblib_spark.operators.dedupe import dedupe_records  # noqa: F401
+from biblib_spark.sources.parse import parse_with_diagnostics  # noqa: F401
 
 
 def _input_fingerprint(corpus: DataFrame) -> dict:
@@ -38,11 +47,18 @@ def run_pipeline(
 ) -> DataFrame:
     """Returns the clusters DataFrame (rid, cluster_id, is_unique, source).
 
-    Stage 1 parses each payload ONCE into the diagnostics union (citations +
-    quarantine rows, reference parse_with_diagnostics); the parsed and
-    quarantine views are filters over that single checkpointed scan.
+    Two stages under ``work_dir``, the same kernel and matcher as
+    ``dedupe_corpus`` with the feature table pinned as a resumable stage
+    instead of a scratch spill:
+
+    - ``features/``: ``features_from_corpus`` — each payload parsed ONCE into
+      the dedup feature rows;
+    - ``clusters/``: ``dedupe_features`` over that stage.
+
     ``source_col`` names a corpus column carrying the per-payload source
-    register (M12); every citation of a payload inherits it.
+    register (M12); every citation of a payload inherits it. Without it the
+    detected format is the source. Unparseable payloads are not kept here;
+    ``sources.parse.parse_corpus_quarantine(corpus)`` returns them.
 
     ``table_format='iceberg'`` checkpoints each stage as an IceTable
     snapshot commit (plans/icetable.py) instead of parquet + _STAGE_OK
@@ -52,7 +68,11 @@ def run_pipeline(
     per-partition lineage + metrics" in its real-cluster table format.
     """
     cfg = cfg or DedupConfig()
-    lineage = _input_fingerprint(corpus)
+    lineage = {
+        **_input_fingerprint(corpus),
+        "cfg": dataclasses.asdict(cfg),
+        "source_col": source_col,
+    }
     if table_format == "iceberg":
         from biblib_spark.plans.icetable import run_stage_ice as stage_fn
     elif table_format == "parquet":
@@ -60,30 +80,15 @@ def run_pipeline(
     else:
         raise ValueError(f"unknown table_format {table_format!r}")
 
-    diag = stage_fn(
+    feat = stage_fn(
         spark,
-        os.path.join(work_dir, "diagnostics"),
-        lambda: parse_with_diagnostics(corpus),
+        os.path.join(work_dir, "features"),
+        lambda: features_from_corpus(corpus, cfg, source_col=source_col),
         lineage,
     )
-    parsed, _quarantine = split_diagnostics(diag)
-
-    def _records() -> DataFrame:
-        if source_col is None:
-            return records_from_parsed(parsed)
-        # per-payload source register joined back by payload id; the corpus
-        # scan prunes to two columns
-        reg = corpus.select(
-            F.col("row_id").alias("__src_row_id"),
-            F.col(source_col).alias("__src"),
-        )
-        joined = parsed.join(reg, parsed["row_id"] == reg["__src_row_id"])
-        return records_from_parsed(joined, source_col="__src")
-
-    clusters = stage_fn(
+    return stage_fn(
         spark,
         os.path.join(work_dir, "clusters"),
-        lambda: dedupe_records(_records(), cfg),
+        lambda: dedupe_features(feat, cfg),
         lineage,
     )
-    return clusters

@@ -20,8 +20,11 @@ ab_gclocker_summary.json; biblib_spark/session.py bakes the same flag
 into local sessions).
 
 Resumable: re-submitting with the same --work-dir skips completed stages
-(per-partition lineage verified; changed input rebuilds). The clusters
-output lands under <work-dir>/clusters.
+(per-partition lineage verified; changed input or config rebuilds). The
+work dir holds two stages: <work-dir>/features (the dedup feature table) and
+<work-dir>/clusters (the output). Without --source-col the detected format
+is each record's source. Unparseable payloads are not written; use
+biblib_spark.sources.parse.parse_corpus_quarantine to list them.
 """
 
 from __future__ import annotations

@@ -223,14 +223,14 @@ def test_pipeline_iceberg_backend_matches_parquet(spark, tmp_path):
     # resume: same snapshot versions afterwards (nothing recommitted)
     v_before = [
         IceTable(os.path.join(wi, s)).current_version()
-        for s in ("diagnostics", "clusters")
+        for s in ("features", "clusters")
     ]
     assert v_before == [1, 1]
     n = run_pipeline(spark, corpus, wi, table_format="iceberg").count()
     assert n == len(got)
     v_after = [
         IceTable(os.path.join(wi, s)).current_version()
-        for s in ("diagnostics", "clusters")
+        for s in ("features", "clusters")
     ]
     assert v_after == v_before
 

@@ -2,13 +2,25 @@
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
 from biblib_spark.corpus import make_corpus
-from biblib_spark.plans.checkpoint import read_marker
+from biblib_spark.plans.checkpoint import StageIntegrityError, read_marker
 from biblib_spark.plans.pipeline import run_pipeline
+
+
+def _cluster_rows(df):
+    return {
+        (r.rid, r.cluster_id, r.is_unique, r.source)
+        for r in df.select("rid", "cluster_id", "is_unique", "source").collect()
+    }
 
 
 def test_pipeline_resume(spark):
@@ -17,7 +29,7 @@ def test_pipeline_resume(spark):
         corpus = make_corpus(spark, 150, seed=11)
         n1 = run_pipeline(spark, corpus, work).count()
         assert n1 > 0
-        for stage in ("diagnostics", "clusters"):
+        for stage in ("features", "clusters"):
             marker = read_marker(os.path.join(work, stage))
             assert "rows" in marker and "lineage" in marker
             assert marker["lineage"]["input_rows"] == 150
@@ -28,7 +40,7 @@ def test_pipeline_resume(spark):
         # skipped regardless of scheduler noise.
         mtimes = {
             stage: os.path.getmtime(os.path.join(work, stage, "_STAGE_OK"))
-            for stage in ("diagnostics", "clusters")
+            for stage in ("features", "clusters")
         }
         n2 = run_pipeline(spark, corpus, work).count()
         assert n2 == n1
@@ -37,10 +49,24 @@ def test_pipeline_resume(spark):
                 os.path.getmtime(os.path.join(work, stage, "_STAGE_OK")) == mt
             ), f"stage {stage} was rebuilt on resume"
 
-        # partial resume: only the deleted stage rebuilds, reusing parsed
+        # partial resume: only the deleted stage rebuilds, reusing features
         shutil.rmtree(os.path.join(work, "clusters"))
         n3 = run_pipeline(spark, corpus, work).count()
         assert n3 == n1
+
+        # every features column is hashed: a swapped file whose norm_title
+        # differs (same row count) fails the resume check
+        parts = glob.glob(os.path.join(work, "features", "part-*.parquet"))
+        part = sorted(parts)[0]
+        table = pq.read_table(part)
+        i = table.schema.get_field_index("norm_title")
+        titles = pa.array([f"tampered {t}" for t in table.column(i).to_pylist()])
+        pq.write_table(table.set_column(i, table.field(i), titles), part)
+        crc = os.path.join(os.path.dirname(part), f".{os.path.basename(part)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        with pytest.raises(StageIntegrityError):
+            run_pipeline(spark, corpus, work)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -119,23 +145,40 @@ def test_resume_with_changed_input_rebuilds(spark):
         n1 = run_pipeline(spark, make_corpus(spark, 60, seed=1), work).count()
         n2 = run_pipeline(spark, make_corpus(spark, 90, seed=2), work).count()
         assert n2 != n1  # rebuilt from the new corpus, not resumed
-        marker = read_marker(os.path.join(work, "diagnostics"))
+        marker = read_marker(os.path.join(work, "features"))
         assert marker["lineage"]["input_rows"] == 90
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_resume_with_changed_config_rebuilds(spark):
+    """C8: a work_dir resumed with a DIFFERENT DedupConfig must rebuild, not
+    return the clusters elected under the first run's preferences."""
+    from pyspark.sql import functions as F
+
+    from biblib_spark.operators.dedupe import DedupConfig, dedupe_corpus
+
+    work = tempfile.mkdtemp(prefix="pipeline_recfg_")
+    try:
+        corpus = make_corpus(spark, 80, seed=13).withColumn(
+            "feed", F.concat(F.lit("reg-"), (F.col("row_id") % 2).cast("string"))
+        )
+        first = DedupConfig(source_preferences=["reg-0", "reg-1"])
+        run_pipeline(spark, corpus, work, first, source_col="feed").count()
+        second = DedupConfig(source_preferences=["reg-1", "reg-0"])
+        got = run_pipeline(spark, corpus, work, second, source_col="feed")
+        fresh = dedupe_corpus(corpus, second, source_col="feed")
+        assert _cluster_rows(got) == _cluster_rows(fresh)
+        marker = read_marker(os.path.join(work, "clusters"))
+        assert marker["lineage"]["cfg"]["source_preferences"] == ["reg-1", "reg-0"]
+        assert marker["lineage"]["source_col"] == "feed"
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
 def test_resume_detects_tampered_partition(spark):
     """C8: per-partition lineage counters catch a corrupted/replaced file."""
-    import glob
-
-    import pytest
-
-    from biblib_spark.plans.checkpoint import (
-        StageIntegrityError,
-        run_stage,
-        verify_stage,
-    )
+    from biblib_spark.plans.checkpoint import run_stage, verify_stage
 
     work = tempfile.mkdtemp(prefix="stage_tamper_")
     path = os.path.join(work, "stage")
@@ -172,9 +215,17 @@ def test_resume_detects_tampered_partition(spark):
 
 
 def test_fused_path_matches_staged_path(spark):
+    """The record kernel, the fused kernel, run_pipeline and dedupe_corpus
+    agree: same feature rows (source aside: the staged records carry none)
+    and the same clusters."""
+    from pyspark.sql import functions as F
+
     from biblib_spark.operators.dedupe import (
+        DedupConfig,
         dedupe_corpus,
         dedupe_records,
+        features_from_corpus,
+        preprocess,
         records_from_parsed,
     )
     from biblib_spark.sources.parse import parse_corpus
@@ -185,6 +236,25 @@ def test_fused_path_matches_staged_path(spark):
     s = {(r.rid, r.cluster_id, r.is_unique) for r in staged.collect()}
     f = {(r.rid, r.cluster_id, r.is_unique) for r in fused.collect()}
     assert s == f and len(s) > 0
+
+    records = records_from_parsed(parse_corpus(corpus))
+    feat_staged = preprocess(records, DedupConfig()).drop("source")
+    feat_fused = features_from_corpus(corpus).drop("source")
+    assert feat_staged.count() == feat_fused.count() > 0
+    assert feat_staged.exceptAll(feat_fused).count() == 0
+    assert feat_fused.exceptAll(feat_staged).count() == 0
+
+    with_feed = corpus.withColumn(
+        "feed", F.concat(F.lit("reg-"), (F.col("row_id") % 3).cast("string"))
+    )
+    for source_col in (None, "feed"):
+        work = tempfile.mkdtemp(prefix="pipeline_parity_")
+        try:
+            piped = run_pipeline(spark, with_feed, work, source_col=source_col)
+            direct = dedupe_corpus(with_feed, source_col=source_col)
+            assert _cluster_rows(piped) == _cluster_rows(direct)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
 
 
 def test_explicit_source_column_drives_preferences(spark):
