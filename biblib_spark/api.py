@@ -56,13 +56,12 @@ def parse_with_diagnostics(
 ) -> ParseResult:
     """(citations, errors) from one payload — the batch never fails for one
     bad record (reference parse_with_diagnostics, diagnostics.rs:110-119)."""
-    from biblib_spark.sources.parse import PARSERS
+    from biblib_spark.sources.parse import PARSERS, parse_payload
 
-    fmt = format if format is not None else detect.detect_format(text)
-    parser = PARSERS.get(fmt)
-    if parser is None:
+    fmt, citations, errors = parse_payload(text, format)
+    if fmt not in PARSERS:
         raise ValueError(f"unknown or unsupported citation format: {fmt!r}")
-    return parser(text)
+    return citations, errors
 
 
 def parse_rendered(

@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Edges (a, b) -> (rid, cluster_id) for every vertex in the edge list.
 
-    cluster_id = min rid of the component.
+    cluster_id = min rid of the component. Raises RuntimeError when the
+    labels have not reached a fixpoint after ``max_iter`` rounds.
     """
     sym = edges.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
@@ -73,6 +74,12 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        # labels short of the fixpoint would split components silently
+        raise RuntimeError(
+            f"connected_components: no fixpoint within max_iter={max_iter} "
+            "rounds (a component's diameter exceeds it)"
+        )
 
     return labels.select("rid", F.col("label").alias("cluster_id"))
 

@@ -160,14 +160,12 @@ def features_from_corpus(
     parallel sources slice (src/dedupe.rs:403-434). When None, the detected
     format stands in.
     """
-    from biblib_spark.kernels import detect
-
     cfg = cfg or DedupConfig()
     shift = 1 << record_idx_bits
     in_cols = ["row_id", "content"] + ([source_col] if source_col else [])
 
     def _fn(batches):
-        from biblib_spark.sources.parse import PARSERS
+        from biblib_spark.sources.parse import parse_payload
 
         rows = FeatureRows(cfg)
         for arrow_batch in batches:
@@ -180,12 +178,8 @@ def features_from_corpus(
                 else row_ids
             )
             for row_id, content, src in zip(row_ids, contents, sources):
-                text = content if isinstance(content, str) else ""
-                fmt = detect.detect_format(text)
-                parser = PARSERS.get(fmt)
-                if parser is None:
-                    continue
-                citations, _errors = parser(text)
+                # unparseable payloads yield no citations, so no feature rows
+                fmt, citations, _errors = parse_payload(content)
                 if len(citations) > shift:
                     # rid = row_id * shift + idx would alias the next payload
                     raise ValueError(
@@ -224,7 +218,7 @@ def dedupe_corpus(
 
 
 def records_from_parsed(parsed: DataFrame, record_idx_bits: int = 20) -> DataFrame:
-    """Adapt parse output (PARSED_SCHEMA) to dedup input.
+    """Adapt parse output (``parse_corpus``) to dedup input.
 
     rid = row_id << record_idx_bits | record_idx keeps the reference's input
     order (payload order, then record order within the payload) so election

@@ -66,15 +66,13 @@ def _title_sim_udf(t1: pd.Series, t2: pd.Series, both_doi: pd.Series) -> pd.Seri
     return pd.Series(out)
 
 
-def _side(feat: DataFrame, side: str) -> DataFrame:
-    return feat.select(
-        *[F.col(c).alias(f"{side}_{c}") for c in _FEATURE_COLS]
-    )
-
-
 def _side_cols(df: DataFrame, side: str) -> DataFrame:
     """Alias every column of ``df`` with a pair-side prefix."""
     return df.select(*[F.col(c).alias(f"{side}_{c}") for c in df.columns])
+
+
+def _side(feat: DataFrame, side: str) -> DataFrame:
+    return _side_cols(feat.select(*_FEATURE_COLS), side)
 
 
 def _coal(c):
@@ -118,6 +116,27 @@ def _join_sides(pairs: DataFrame, feat: DataFrame) -> DataFrame:
     )
 
 
+def _title_contained(min_len: int):
+    """C4 title condition: the shorter normalized title (at least
+    ``min_len`` chars) is a substring of the longer."""
+    t_a, t_b = F.col("a_norm_title"), F.col("b_norm_title")
+    la, lb = F.length(t_a), F.length(t_b)
+    return (F.least(la, lb) >= min_len) & F.when(
+        la <= lb, t_b.contains(t_a)
+    ).otherwise(t_a.contains(t_b))
+
+
+def _corroborated(title_cond, m: dict):
+    """C4 corroboration on top of a title condition: same year, volume or
+    pages, journal or issn."""
+    return (
+        title_cond
+        & m["years_match"]
+        & (m["volumes_match"] | m["pages_match"])
+        & (m["journal_match"] | m["issn_match"])
+    )
+
+
 def _containment_arm(m: dict, min_len: int):
     """C4 substring/containment arm (north_star's suffix-array substring
     pass, re-expressed): the shorter normalized title is a strict substring
@@ -126,16 +145,7 @@ def _containment_arm(m: dict, min_len: int):
     thresholds. Corroboration requirements mirror the no-DOI reference arm
     (journal/issn AND volume/pages) plus same year, so precision stays at
     reference level. JVM-side `contains` — no Python in this arm."""
-    t_a, t_b = F.col("a_norm_title"), F.col("b_norm_title")
-    la, lb = F.length(t_a), F.length(t_b)
-    contained = F.when(la <= lb, t_b.contains(t_a)).otherwise(t_a.contains(t_b))
-    return (
-        (F.least(la, lb) >= min_len)
-        & contained
-        & m["years_match"]
-        & (m["volumes_match"] | m["pages_match"])
-        & (m["journal_match"] | m["issn_match"])
-    )
+    return _corroborated(_title_contained(min_len), m)
 
 
 def _doi_presence():
@@ -263,9 +273,7 @@ def verify_pairs(
     )
     cols = [F.col("a"), F.col("b"), sim.alias("sim")]
     if containment:
-        contained = (F.least(la, lb) >= containment_min_len) & F.when(
-            la <= lb, t_b.contains(t_a)
-        ).otherwise(t_a.contains(t_b))
+        contained = _title_contained(containment_min_len)
         cols.append(contained.alias("title_contained"))
         surv = (
             j1.filter(gate | contained)
@@ -284,12 +292,7 @@ def verify_pairs(
     both_doi, doi_eq = _doi_presence()
     is_dup = _arm_predicate(F.col("sim"), m, both_doi, doi_eq)
     if containment:
-        is_dup = is_dup | (
-            F.col("title_contained")
-            & m["years_match"]
-            & (m["volumes_match"] | m["pages_match"])
-            & (m["journal_match"] | m["issn_match"])
-        )
+        is_dup = is_dup | _corroborated(F.col("title_contained"), m)
     return j2.filter(is_dup).select("a", "b")
 
 

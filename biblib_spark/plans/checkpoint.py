@@ -53,12 +53,14 @@ def _hashable(dt) -> bool:
     return True
 
 
-def _partition_stats(df: DataFrame) -> dict[str, dict]:
-    """Per output-file row count + order-insensitive content-hash XOR.
+def _file_folds(df: DataFrame) -> list[tuple[str, int, int]]:
+    """(input file URI, row count, content-hash XOR) per file ``df`` scans.
 
-    xor (not sum) so the fold can't overflow; xxhash64 over every hashable
-    column fingerprints content, not just shape (map-typed columns are
-    excluded — Spark prohibits hashing them; row counts still cover them).
+    xor (not sum) so the fold can't overflow and is order-insensitive;
+    xxhash64 over every hashable column fingerprints content, not just shape
+    (map-typed columns are excluded — Spark prohibits hashing them; row
+    counts still cover them). The one tamper-detection fold behind both the
+    _STAGE_OK marker and the IceTable manifest (plans/icetable.py).
     """
     cols = [f.name for f in df.schema.fields if _hashable(f.dataType)]
     hexpr = (
@@ -75,9 +77,13 @@ def _partition_stats(df: DataFrame) -> dict[str, dict]:
         .agg(F.count(F.lit(1)).alias("rows"), hexpr.alias("hxor"))
         .collect()
     )
+    return [(r["f"], r["rows"], int(r["hxor"] or 0)) for r in rows]
+
+
+def _partition_stats(df: DataFrame) -> dict[str, dict]:
+    """Per output-file (by file name) row count + content-hash XOR."""
     return {
-        os.path.basename(r["f"]): {"rows": r["rows"], "hxor": int(r["hxor"] or 0)}
-        for r in rows
+        os.path.basename(f): {"rows": n, "hxor": h} for f, n, h in _file_folds(df)
     }
 
 

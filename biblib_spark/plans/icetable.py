@@ -24,8 +24,8 @@ torn read, and an abandoned writer leaves only unreferenced files that
 ``expire_snapshots`` sweeps.
 
 The manifest carries per-file row counts + content-hash XORs — the same
-per-partition lineage the _STAGE_OK markers record (checkpoint.py
-``_partition_stats``), so ``verify()`` gives checkpoint-grade tamper
+per-partition lineage the _STAGE_OK markers record (one fold,
+checkpoint.py ``_file_folds``), so ``verify()`` gives checkpoint-grade tamper
 detection over any snapshot.
 
 At 100 TB: manifests here are single JSON files, fine for 10^3-10^5 data
@@ -57,31 +57,15 @@ class SnapshotIntegrityError(RuntimeError):
 
 def _file_stats(df: DataFrame) -> list[dict]:
     """Per-data-file manifest entries: full path, rows, content-hash XOR
-    (order-insensitive; same fold as checkpoint._partition_stats)."""
-    from biblib_spark.plans.checkpoint import _hashable
+    (checkpoint._file_folds, the fold behind the _STAGE_OK marker)."""
+    from biblib_spark.plans.checkpoint import _file_folds
 
-    from pyspark.sql import functions as F
-
-    cols = [f.name for f in df.schema.fields if _hashable(f.dataType)]
-    hexpr = (
-        F.expr(
-            "bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in cols) + "))"
-        )
-        if cols
-        else F.lit(0)
-    )
-    rows = (
-        df.groupBy(F.input_file_name().alias("f"))
-        .agg(F.count(F.lit(1)).alias("rows"), hexpr.alias("hxor"))
-        .collect()
-    )
     out = []
-    for r in rows:
-        path = r["f"]
+    for path, rows, hxor in _file_folds(df):
         # input_file_name returns a URI; normalize to a local path
         if path.startswith("file:"):
             path = path[len("file:"):]
-        out.append({"path": path, "rows": r["rows"], "hxor": int(r["hxor"] or 0)})
+        out.append({"path": path, "rows": rows, "hxor": hxor})
     return sorted(out, key=lambda e: e["path"])
 
 

@@ -63,42 +63,13 @@ CITATION_SCHEMA = StructType(
     ]
 )
 
-# Parse-stage output: one row per parsed citation record.
-# record_idx preserves per-payload record order (semantically meaningful —
-# election tie-breaks and author order depend on it, SURVEY.md §7.3).
-PARSED_SCHEMA = StructType(
-    [
-        StructField("content_sha", StringType(), nullable=False),
-        StructField("row_id", LongType(), nullable=False),
-        StructField("record_idx", IntegerType(), nullable=False),
-        StructField("format", StringType()),
-        StructField("citation", CITATION_SCHEMA),
-    ]
-)
-
-# Quarantine output (reference src/error.rs:74-158): one row per parse error;
-# the batch never fails for one bad record (SURVEY.md §2.1 S4).
-QUARANTINE_SCHEMA = StructType(
-    [
-        StructField("content_sha", StringType(), nullable=False),
-        StructField("row_id", LongType(), nullable=False),
-        StructField("format", StringType()),
-        StructField("error_line", IntegerType()),
-        StructField(
-            "error_span",
-            StructType(
-                [StructField("start", LongType()), StructField("end", LongType())]
-            ),
-        ),
-        StructField("error_kind", StringType()),
-        StructField("error_msg", StringType()),
-    ]
-)
-
 # One-pass diagnostics output (reference parse_with_diagnostics,
 # src/diagnostics.rs:111-119): citations AND errors from a single parse of
 # each payload, discriminated by ``kind`` — the per-payload (results, errors)
-# pair re-expressed as a union table.
+# pair re-expressed as a union table. record_idx preserves per-payload record
+# order (semantically meaningful — election tie-breaks and author order depend
+# on it, SURVEY.md §7.3); error rows carry the reference's error data
+# (src/error.rs:74-158) with byte-offset spans.
 DIAGNOSTICS_SCHEMA = StructType(
     [
         StructField("content_sha", StringType(), nullable=False),

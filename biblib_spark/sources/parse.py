@@ -1,11 +1,13 @@
 """The parse stage: corpus rows -> (parsed citation rows, quarantine rows).
 
-Spark shape (SURVEY.md §3.1): one projection computes ``content_sha`` and the
-detected ``format``; one ``mapInPandas`` runs the per-format Python kernels
-over Arrow batches and emits already-exploded citation rows with a
-``record_idx`` that preserves per-payload record order. Parsing is
-embarrassingly parallel per content row — no shuffle in this stage; the only
-JVM<->Python boundary is the Arrow batch transfer.
+Spark shape (SURVEY.md §3.1): one projection computes ``content_sha``; one
+``mapInPandas`` runs ``parse_payload`` (format sniff + per-format Python
+kernel) over Arrow batches and emits already-exploded citation rows with a
+``record_idx`` that preserves per-payload record order, plus one row per
+parse error. Parsing is embarrassingly parallel per content row — no
+shuffle in this stage; the only JVM<->Python boundary is the Arrow batch
+transfer. ``parse_corpus`` and ``parse_corpus_quarantine`` are the two
+halves of that one pass.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ from biblib_spark.kernels.enw import parse_enw
 from biblib_spark.kernels.ictrp_xml import parse_ictrp_xml
 from biblib_spark.kernels.pubmed import parse_pubmed
 from biblib_spark.kernels.ris import parse_ris
-from biblib_spark.schema import DIAGNOSTICS_SCHEMA, PARSED_SCHEMA, QUARANTINE_SCHEMA
+from biblib_spark.schema import DIAGNOSTICS_SCHEMA
 
 # Parser registry: format label -> kernel returning (citations, errors).
 # Formats land here as their kernels are implemented (SURVEY.md §7.2).
@@ -43,100 +45,32 @@ PARSERS: dict[str, Callable[[str], tuple[list[dict], list[dict]]]] = {
 }
 
 
-def register_parser(
-    fmt: str, fn: Callable[[str], tuple[list[dict], list[dict]]]
-) -> None:
-    PARSERS[fmt] = fn
+def parse_payload(
+    text: str | None, fmt: str | None = None
+) -> tuple[str, list[dict], list[dict]]:
+    """One payload -> (format, citations, errors) — the one detect->parse
+    decision every caller shares (reference parse_with_diagnostics,
+    src/diagnostics.rs:111-119).
 
-
-def with_ingest_columns(corpus: DataFrame) -> DataFrame:
-    """Add ``content_sha`` (the per-row invariant vs the reference,
-    BASELINE.json input_hint) and the detected ``format``.
-
-    Format detection is a cheap prefix/contains check — done in the Python
-    kernel during parse; here we only add the sha (JVM-side, codegen).
+    ``fmt`` pins a parser; None sniffs it with ``detect_format``. A NULL
+    payload parses as the empty string. A format with no parser yields no
+    citations and one ``unknown_format`` error row.
     """
-    return corpus.withColumn("content_sha", F.sha2(F.col("content"), 256))
-
-
-def _parse_partition(
-    batches: Iterator[pd.DataFrame], quarantine: bool
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out: dict[str, list[Any]] = {
-            "content_sha": [],
-            "row_id": [],
-            "record_idx": [],
-            "format": [],
-        }
-        recs: list[Any] = []
-        for sha, row_id, content in zip(
-            pdf["content_sha"], pdf["row_id"], pdf["content"]
-        ):
-            text = content if isinstance(content, str) else ""
-            fmt = detect.detect_format(text)
-            parser = PARSERS.get(fmt)
-            if parser is None:
-                if quarantine and fmt == detect.FMT_UNKNOWN:
-                    out["content_sha"].append(sha)
-                    out["row_id"].append(row_id)
-                    out["record_idx"].append(0)
-                    out["format"].append(fmt)
-                    recs.append(
-                        {
-                            "error_line": None,
-                            "error_span": None,
-                            "error_kind": "unknown_format",
-                            "error_msg": "Unknown or unsupported citation format",
-                        }
-                    )
-                continue
-            citations, errors = parser(text)
-            if quarantine:
-                for err in errors:
-                    out["content_sha"].append(sha)
-                    out["row_id"].append(row_id)
-                    out["record_idx"].append(0)
-                    out["format"].append(fmt)
-                    recs.append(
-                        {
-                            "error_line": err.get("error_line"),
-                            "error_span": err.get("error_span"),
-                            "error_kind": err.get("error_kind"),
-                            "error_msg": err.get("error_msg"),
-                        }
-                    )
-            else:
-                for idx, citation in enumerate(citations):
-                    out["content_sha"].append(sha)
-                    out["row_id"].append(row_id)
-                    out["record_idx"].append(idx)
-                    out["format"].append(fmt)
-                    recs.append(citation)
-        result = pd.DataFrame(out)
-        if quarantine:
-            result["error_line"] = pd.Series(
-                [r["error_line"] for r in recs], dtype="object"
-            )
-            result["error_span"] = pd.Series(
-                [r["error_span"] for r in recs], dtype="object"
-            )
-            result["error_kind"] = [r["error_kind"] for r in recs]
-            result["error_msg"] = [r["error_msg"] for r in recs]
-            result = result[
-                [
-                    "content_sha",
-                    "row_id",
-                    "format",
-                    "error_line",
-                    "error_span",
-                    "error_kind",
-                    "error_msg",
-                ]
-            ]
-        else:
-            result["citation"] = pd.Series(recs, dtype="object")
-        yield result
+    text = text if isinstance(text, str) else ""
+    if fmt is None:
+        fmt = detect.detect_format(text)
+    parser = PARSERS.get(fmt)
+    if parser is None:
+        return fmt, [], [
+            {
+                "error_line": None,
+                "error_span": None,
+                "error_kind": "unknown_format",
+                "error_msg": "Unknown or unsupported citation format",
+            }
+        ]
+    citations, errors = parser(text)
+    return fmt, citations, errors
 
 
 def _diag_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -161,30 +95,12 @@ def _diag_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for sha, row_id, content in zip(
             pdf["content_sha"], pdf["row_id"], pdf["content"]
         ):
-            text = content if isinstance(content, str) else ""
-            fmt = detect.detect_format(text)
-            parser = PARSERS.get(fmt)
-            if parser is None:
-                emit(
-                    sha,
-                    row_id,
-                    "error",
-                    None,
-                    fmt,
-                    None,
-                    {
-                        "error_kind": "unknown_format",
-                        "error_msg": "Unknown or unsupported citation format",
-                    },
-                )
-                continue
-            citations, errors = parser(text)
+            fmt, citations, errors = parse_payload(content)
             for idx, citation in enumerate(citations):
                 emit(sha, row_id, "citation", idx, fmt, citation, None)
             for err in errors:
                 emit(sha, row_id, "error", None, fmt, None, err)
-        result = pd.DataFrame({c: pd.Series(out[c], dtype="object") for c in cols})
-        yield result
+        yield pd.DataFrame({c: pd.Series(out[c], dtype="object") for c in cols})
 
 
 def parse_with_diagnostics(corpus: DataFrame) -> DataFrame:
@@ -192,13 +108,23 @@ def parse_with_diagnostics(corpus: DataFrame) -> DataFrame:
     (DIAGNOSTICS_SCHEMA). The reference's ``parse_with_diagnostics`` returns
     (citations, errors) per payload; here both live in one DataFrame keyed by
     ``kind`` so a single scan (or checkpointed stage) serves the parsed view
-    AND the quarantine view — no second parse of 100 TB of payloads."""
-    ingested = with_ingest_columns(corpus).select("content_sha", "row_id", "content")
+    AND the quarantine view — no second parse of 100 TB of payloads.
+
+    ``content_sha`` (sha256 of the payload) is the per-row invariant vs the
+    reference (BASELINE.json input_hint), computed JVM-side."""
+    ingested = corpus.select(
+        F.sha2(F.col("content"), 256).alias("content_sha"), "row_id", "content"
+    )
     return ingested.mapInPandas(_diag_partition, schema=DIAGNOSTICS_SCHEMA)
 
 
 def split_diagnostics(diag: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Diagnostics union -> (parsed PARSED_SCHEMA view, quarantine view)."""
+    """Diagnostics union -> (parsed view, quarantine view).
+
+    parsed: (content_sha, row_id, record_idx, format, citation), one row per
+    citation; quarantine: (content_sha, row_id, format, error_line,
+    error_span, error_kind, error_msg), one row per parse error — the batch
+    never fails for one bad record (reference src/error.rs:74-158)."""
     parsed = diag.filter(F.col("kind") == "citation").select(
         "content_sha",
         "row_id",
@@ -219,21 +145,14 @@ def split_diagnostics(diag: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def parse_corpus(corpus: DataFrame) -> DataFrame:
-    """Corpus -> parsed citation rows (PARSED_SCHEMA)."""
-    ingested = with_ingest_columns(corpus).select("content_sha", "row_id", "content")
-    return ingested.mapInPandas(
-        lambda it: _parse_partition(it, quarantine=False), schema=PARSED_SCHEMA
-    )
+    """Corpus -> parsed citation rows (the parsed half of
+    ``split_diagnostics``)."""
+    return split_diagnostics(parse_with_diagnostics(corpus))[0]
 
 
 def parse_corpus_quarantine(corpus: DataFrame) -> DataFrame:
-    """Corpus -> quarantine rows (QUARANTINE_SCHEMA) for records that failed.
+    """Corpus -> quarantine rows (the error half of ``split_diagnostics``).
 
-    Runs the same kernels; at 100 TB you'd compute both outputs in one pass
-    and fork the writer — kept as two scans here for plan simplicity, each
-    scan prunes to (content_sha, row_id, content) only.
-    """
-    ingested = with_ingest_columns(corpus).select("content_sha", "row_id", "content")
-    return ingested.mapInPandas(
-        lambda it: _parse_partition(it, quarantine=True), schema=QUARANTINE_SCHEMA
-    )
+    To get both halves from one parse, checkpoint ``parse_with_diagnostics``
+    once and split that."""
+    return split_diagnostics(parse_with_diagnostics(corpus))[1]

@@ -309,3 +309,17 @@ def test_rid_overflow_raises_instead_of_colliding(spark):
     assert records_from_parsed(
         parse_corpus(corpus).filter("record_idx < 2"), record_idx_bits=1
     ).count() == 2
+
+
+def test_connected_components_raises_without_fixpoint(spark):
+    """A 12-vertex path needs more propagation rounds than max_iter=2: CC
+    must raise instead of returning unconverged (split) labels."""
+    from biblib_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(11)], "a long, b long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(edges, max_iter=2)
+    labels = {r.cluster_id for r in connected_components(edges).collect()}
+    assert labels == {0}

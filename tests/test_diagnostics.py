@@ -78,6 +78,38 @@ def test_to_diagnostic_color_codes():
     assert "\x1b[" not in plain
 
 
+@pytest.mark.parametrize(
+    "source, line, span, kind, origin, src_line, col, width",
+    [
+        # span -> line:col of its start, underline as wide as the span
+        ("TY  - JOUR\nAU  - Smith, John\nER  -\n", None, (11, 13), "bad_tag",
+         "2:1", "AU  - Smith, John", 1, 2),
+        # line only -> the whole line underlined
+        ("line one\nline two\nline three", 2, None, None,
+         "2:1", "line two", 1, 8),
+        # no position -> offset 0
+        ("abc", None, None, "k", "1:1", "abc", 1, 1),
+        ("", None, None, "k", "1:1", "", 1, 1),
+        # span past EOF -> clamped to the end of the source
+        ("ab", None, (50, 60), None, "1:3", "ab", 3, 1),
+        # byte span (3, 5) is chars (2, 4): 'é' is 2 bytes
+        ("é\nAB", None, (3, 5), None, "2:1", "AB", 1, 2),
+    ],
+    ids=["span", "line_only", "no_position", "empty_source", "span_past_eof",
+         "utf8_span"],
+)
+def test_to_diagnostic_placement(source, line, span, kind, origin, src_line,
+                                 col, width):
+    diag = to_diagnostic("msg", "f", source, line=line, span=span, kind=kind)
+    out = diag.splitlines()
+    assert out[0] == (f"Error [{kind}]: msg" if kind else "Error: msg")
+    assert out[1] == f"   ╭─[ f:{origin} ]"
+    ln = origin.split(":")[0]
+    i = out.index(f" {ln} │ {src_line}")
+    underline = out[i + 1].split("│ ", 1)[1]
+    assert underline == " " * (col - 1) + "┬" + "─" * (width - 1)
+
+
 def test_to_diagnostic_line_past_eof():
     # a line number beyond the source must not crash (defensive analog of
     # primary_byte_range's unwrap_or(0))
@@ -148,3 +180,31 @@ def test_render_diagnostics_dataframe(spark):
     out2 = render_diagnostics(errors, corpus)
     got2 = {r.row_id: r.diagnostic for r in out2.collect()}
     assert "payload:1" in got2[1]
+
+
+def test_render_diagnostics_one_report_per_error_row(spark):
+    """Two identical unparseable payloads: one report per error row (the
+    join is on row_id, not on the content hash), placed at the CHARACTER
+    column of the kernel's byte span ('Über Élan' is 2 bytes longer than
+    its 9 chars, so byte 35 is char 33: the start of line 4)."""
+    from biblib_spark.diagnostics import render_diagnostics
+    from biblib_spark.sources.parse import parse_corpus_quarantine
+
+    bad = (
+        "TY  - JOUR\nTI  - Über Élan\nER  -\n"
+        "TY  - JOUR\nAU  - Smith, John\nER  -\n"
+    )
+    corpus = spark.createDataFrame(
+        [(0, "a.ris", bad), (1, "b.ris", bad)],
+        "row_id long, path string, content string",
+    )
+    errors = parse_corpus_quarantine(corpus)
+    assert [
+        (r.error_kind, r.error_span.start) for r in errors.collect()
+    ] == [("missing_value", 35)] * 2
+    out = render_diagnostics(errors, corpus, filename_col="path").collect()
+    assert sorted(r.row_id for r in out) == [0, 1]
+    for r in out:
+        lines = r.diagnostic.splitlines()
+        assert lines[1] == f"   ╭─[ {'ab'[r.row_id]}.ris:4:1 ]"
+        assert " 4 │ TY  - JOUR" in lines

@@ -1,7 +1,8 @@
 """Import-level guards: no dangling imports, no import-time side effects.
 
-Deleting a library function must not leave a script, job, bench or the
-entry file importing it; the perfbench trace targets must name attributes
+Deleting a library function must not leave a library module, test, script,
+job, bench or the entry file importing it — function-local imports included,
+since those only fail when their branch runs; the perfbench trace targets must name attributes
 that exist. Both are checked statically (``ast``) plus ``hasattr`` — no
 Spark session is needed.
 """
@@ -22,12 +23,14 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SOURCES = sorted(
     glob.glob(os.path.join(ROOT, "scripts", "*.py"))
     + glob.glob(os.path.join(ROOT, "jobs", "*.py"))
+    + glob.glob(os.path.join(ROOT, "biblib_spark", "**", "*.py"), recursive=True)
+    + glob.glob(os.path.join(ROOT, "tests", "*.py"))
     + [
         os.path.join(ROOT, f)
         for f in ("bench.py", "bench_extra.py", "__spark_entry__.py")
     ]
 )
-PACKAGES = ("biblib_spark", "scripts")
+PACKAGES = ("biblib_spark", "scripts", "tests")
 
 
 def _project_imports(path: str) -> list[tuple[str, str, int]]:

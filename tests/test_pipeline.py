@@ -73,8 +73,8 @@ def test_pipeline_resume(spark):
 
 def test_parse_with_diagnostics_one_pass(spark):
     """Reference parse_with_diagnostics (src/diagnostics.rs:111-119): one
-    parse emits citations AND quarantine rows; the split views agree with the
-    dedicated single-purpose scans."""
+    parse emits citations AND quarantine rows; the split views agree with
+    ``parse_corpus`` / ``parse_corpus_quarantine`` on a fresh scan."""
     from pyspark.sql import functions as F
 
     from biblib_spark.sources.parse import (
