@@ -69,10 +69,7 @@ def main() -> None:
     out["n_candidates"] = pairs_m.count()
 
     sc.setJobDescription("phase: verify (noop)")
-    edges = verify_pairs(
-        pairs_m, feat, containment=cfg.containment_verify,
-        containment_min_len=cfg.containment_min_len,
-    )
+    edges = verify_pairs(pairs_m, feat, containment=cfg.containment_verify)
     out["verify_noop_s"] = _noop(edges)
 
     sc.setJobDescription("phase: full pipeline")

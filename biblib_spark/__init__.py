@@ -14,8 +14,8 @@ Layout
 - ``kernels``   pure-Python parsing/normalization functions (no Spark imports);
                 these run inside Arrow-batched pandas UDFs.
 - ``sources``   corpus ingest + the parse stage (content -> citation rows).
-- ``functions`` Spark column builders: normalization, similarity, MinHash,
-                SimHash (vectorized numpy inside pandas UDFs).
+- ``functions`` MinHash / SimHash signature kernels (vectorized numpy) and
+                the MinHash band-key pandas UDF; ``simhash`` imports no Spark.
 - ``operators`` blocking, candidate generation, pair verification, connected
                 components, representative election, doc-level text ops, ANN.
 - ``plans``     end-to-end pipeline assembly + checkpoint/resume.

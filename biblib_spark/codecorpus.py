@@ -262,11 +262,6 @@ def truth_label(row_id: int, seed: int) -> str:
     return f"o{o}"
 
 
-def slot_exists(row_id: int, seed: int) -> bool:
-    o, k = divmod(row_id, SLOTS_PER_ORIGIN)
-    return k < n_clones(o, seed)
-
-
 def _gen_partition(batches: Iterator[pd.DataFrame], seed: int) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows = []

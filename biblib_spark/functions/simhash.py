@@ -13,10 +13,6 @@ from __future__ import annotations
 
 import zlib
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
-
 
 def simhash64(text: str, k: int) -> int:
     """64-bit SimHash over k-char shingles (crc32 doubled to 64 bits)."""
@@ -71,21 +67,3 @@ def simhash64_batch(texts: list, k: int) -> list[int]:
         out.append(int(sim.astype(np.int64)))  # two's-complement into int64
     return out
 
-
-def make_quarter_keys_udf(k: int, max_title_len: int):
-    """pandas UDF: norm_title -> array<long> of 4 quarter keys, or [] when the
-    title is longer than ``max_title_len`` (MinHash covers those)."""
-
-    @pandas_udf(ArrayType(LongType()))
-    def quarter_keys_udf(titles: pd.Series) -> pd.Series:
-        def _one(t: object) -> list[int]:
-            if not isinstance(t, str) or not t or len(t) > max_title_len:
-                return []
-            h = simhash64(t, k)
-            return [
-                (q << 16 | ((h >> (16 * q)) & 0xFFFF)) for q in range(4)
-            ]
-
-        return titles.map(_one)
-
-    return quarter_keys_udf

@@ -11,7 +11,7 @@ raw text in extra_fields.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from .authors import split_given_and_middle

@@ -2,37 +2,13 @@
 
 Mirrors the reference ``Citation`` struct (src/lib.rs:276-320) and the JSON
 shape of tests/fixtures/ictrp/expected-output.json. Kernels produce plain
-dicts with exactly these keys so a single Arrow StructType covers all formats
-(see biblib_spark.schema.CITATION_SCHEMA).
+dicts with exactly the keys of ``empty_citation()`` so a single Arrow StructType
+covers all formats (see biblib_spark.schema.CITATION_SCHEMA).
 """
 
 from __future__ import annotations
 
 from typing import Any
-
-CITATION_KEYS = (
-    "citation_type",
-    "title",
-    "authors",
-    "journal",
-    "journal_abbr",
-    "date",
-    "volume",
-    "issue",
-    "pages",
-    "issn",
-    "doi",
-    "accession_number",
-    "pmid",
-    "pmc_id",
-    "abstract_text",
-    "keywords",
-    "urls",
-    "language",
-    "mesh_terms",
-    "publisher",
-    "extra_fields",
-)
 
 
 def empty_citation() -> dict[str, Any]:

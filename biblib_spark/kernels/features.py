@@ -24,6 +24,10 @@ from biblib_spark.kernels.norm import (
     normalize_volume,
 )
 
+#: titles up to this many chars get SimHash quarter keys; MinHash covers
+#: longer ones
+SIMHASH_MAX_TITLE = 24
+
 FEATURE_SCHEMA = pa.schema(
     [
         pa.field("rid", pa.int64(), nullable=False),
@@ -52,8 +56,8 @@ class FeatureRows:
     """Column buffers for one batch of feature rows under one DedupConfig."""
 
     def __init__(self, cfg) -> None:
-        # functions.* import pyspark at module level; import them here so
-        # this module stays importable without Spark
+        # functions.minhash imports pyspark at module level; import it here
+        # so this module stays importable without Spark
         from biblib_spark.functions.minhash import _perm_params, lsh_keys_batch
         from biblib_spark.functions.simhash import simhash64
 
@@ -63,7 +67,6 @@ class FeatureRows:
         self._k, self._bands = cfg.shingle_k, cfg.bands
         self._group_by_year = cfg.group_by_year
         self._simhash_on = cfg.simhash_enabled
-        self._sim_max = cfg.simhash_max_title
         self._cols: dict[str, list] = {f.name: [] for f in FEATURE_SCHEMA}
 
     def add(
@@ -97,7 +100,7 @@ class FeatureRows:
         cols["year_key"].append(
             (year if year is not None else 0) if self._group_by_year else 0
         )
-        if self._simhash_on and nt and len(nt) <= self._sim_max:
+        if self._simhash_on and nt and len(nt) <= SIMHASH_MAX_TITLE:
             h = self._simhash64(nt, self._k)
             cols["simhash_keys"].append(
                 [(q << 16 | ((h >> (16 * q)) & 0xFFFF)) for q in range(4)]

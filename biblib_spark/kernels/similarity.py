@@ -18,7 +18,6 @@ Rust ``char``). A numpy-vectorized batch driver is provided for pandas UDFs.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 
 def jaro(a: str, b: str) -> float:
@@ -202,16 +201,3 @@ def jaro_batch(
             )
     return out
 
-
-def jaro_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batch jaro over two string Series (None treated as "")."""
-    av = a.fillna("").tolist()
-    bv = b.fillna("").tolist()
-    return pd.Series(jaro_batch(av, bv))
-
-
-def jaro_winkler_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batch jaro_winkler over two string Series (None treated as "")."""
-    av = a.fillna("").tolist()
-    bv = b.fillna("").tolist()
-    return pd.Series(jaro_batch(av, bv, winkler=np.ones(len(av), dtype=bool)))

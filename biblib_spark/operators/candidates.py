@@ -7,9 +7,9 @@ precision is reference-identical and recall is governed by tier coverage:
 
 - T0 exact identity: equi-joins on the (parse-normalized) DOI, the PMID and
   the accession number — the reference's identity fields (src/lib.rs:299-304)
-- T1 exact normalized title: equi-join on norm_title
-- T2 MinHash-LSH band keys over norm_title shingles
-- T3 SimHash quarter keys for short titles
+- T1 MinHash-LSH band keys over norm_title shingles
+- T2 SimHash quarter keys for short titles
+- T3 prefix/suffix slices of norm_title (C4 containment admission)
 
 All tiers block on year_key (M1: comparisons never cross blocks). Skew (C7):
 a bucket larger than ``max_bucket`` (mega-journal year blocks, boilerplate
@@ -23,6 +23,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: C4 affix length: the prefix and suffix keys are the first / last AFFIX_LEN
+#: chars of norm_title; shorter titles get no affix key
+AFFIX_LEN = 24
 
 
 def pairs_from_rid_lists(grouped: DataFrame, max_bucket: int) -> DataFrame:
@@ -196,13 +200,6 @@ def flat_candidate_keys(feat: DataFrame, cfg) -> DataFrame:
 
     id_tiers = IDENTITY_TIERS if cfg.pmid_accession_tiers else IDENTITY_TIERS[:1]
     parts = [ident(salt, col) for salt, col in id_tiers]
-    if cfg.exact_title_tier:
-        parts.append(
-            opt(
-                F.col("norm_title") != "",
-                F.xxhash64(F.lit("title"), F.col("norm_title")),
-            )
-        )
     # coalesce: F.concat is NULL-absorbing — one NULL key array (a record
     # that skipped feature extraction) must not erase the record's other tiers
     parts.append(
@@ -217,26 +214,22 @@ def flat_candidate_keys(feat: DataFrame, cfg) -> DataFrame:
                 empty,
             )
         )
-    long_enough = F.length("norm_title") >= cfg.prefix_len
+    long_enough = F.length("norm_title") >= AFFIX_LEN
     if cfg.prefix_tier:
         parts.append(
             opt(
                 long_enough,
-                F.xxhash64(
-                    F.lit("prefix"), F.substring("norm_title", 1, cfg.prefix_len)
-                ),
+                F.xxhash64(F.lit("prefix"), F.substring("norm_title", 1, AFFIX_LEN)),
             )
         )
-    if cfg.suffix_tier:
-        parts.append(
-            opt(
-                long_enough,
-                F.xxhash64(
-                    F.lit("suffix"),
-                    F.substring("norm_title", -cfg.prefix_len, cfg.prefix_len),
-                ),
-            )
+    parts.append(
+        opt(
+            long_enough,
+            F.xxhash64(
+                F.lit("suffix"), F.substring("norm_title", -AFFIX_LEN, AFFIX_LEN)
+            ),
         )
+    )
     return feat.select(
         "year_key", F.explode(F.concat(*parts)).alias("bkey"), "rid"
     )

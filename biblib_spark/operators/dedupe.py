@@ -43,29 +43,15 @@ class DedupConfig:
     bands: int = 16
     minhash_seed: int = 1815
     max_bucket: int = 64  # C7 star-policy cap per candidate bucket
-    # C7 salted pair generation: identical pairs, but no task ever holds a
-    # whole bucket (salted size/min aggregation + streamed star join). Costs
-    # one extra combinable shuffle — turn on when buckets can exceed ~10^6
-    # members (boilerplate titles at 10^12-row scale); AQE handles the rest
-    # locally, so the default favors the single-shuffle path
+    # C7: same pairs, no task holds a whole bucket; one extra shuffle, for
+    # buckets past ~10^6 members
     salted_pairs: bool = False
-    # C1 pmid/accession identity tiers (DOI is always on). Separately
-    # switchable so recall harnesses can prove the SIMILARITY tiers'
-    # coverage without registry-identifier shortcuts
-    pmid_accession_tiers: bool = True
+    # the switches below exist so tests can isolate one candidate tier or
+    # verify arm; every shipped caller keeps the defaults
+    pmid_accession_tiers: bool = True  # C1 (the DOI tier is always on)
     simhash_enabled: bool = True
-    simhash_max_title: int = 24
-    # redundant while LSH is on (identical normalized titles -> identical
-    # signatures -> same band buckets); enable when LSH is configured off
-    exact_title_tier: bool = False
-    # C4 containment: candidate admission on the first/last prefix_len chars
-    # of norm_title, plus a substring verify arm for pairs whose jaro falls
-    # below the reference thresholds (truncated/decorated titles)
-    prefix_tier: bool = True
-    suffix_tier: bool = True
-    prefix_len: int = 24
-    containment_verify: bool = True
-    containment_min_len: int = 20
+    prefix_tier: bool = True  # C4 prefix key (the suffix key is always on)
+    containment_verify: bool = True  # C4 substring verify arm
 
 
 # columns dedupe_records expects on its input, in FeatureRows.add's argument
@@ -108,12 +94,7 @@ def dedupe_features(feat: DataFrame, cfg: DedupConfig | None = None) -> DataFram
     """Preprocessed+materialized features -> (rid, cluster_id, is_unique, source)."""
     cfg = cfg or DedupConfig()
     pairs = candidate_pairs(feat, cfg)
-    dup_edges = verify_pairs(
-        pairs,
-        feat,
-        containment=cfg.containment_verify,
-        containment_min_len=cfg.containment_min_len,
-    )
+    dup_edges = verify_pairs(pairs, feat, containment=cfg.containment_verify)
     clustered = assign_clusters(feat.select("rid"), dup_edges)
     enriched = clustered.join(
         feat.select("rid", "source", "abstract_text", "doi"), "rid"

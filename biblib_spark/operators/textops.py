@@ -1,22 +1,20 @@
 """Document-level text operations for large-scale training-data pipelines.
 
-Exact dedup, normalized dedup, token/quality stats, n-gram Jaccard near-dup,
-document fingerprinting, language-ID heuristic — all over a generic
+Token/quality stats, n-gram Jaccard and SimHash near-dup, document
+fingerprinting, language-ID heuristic — all over a generic
 ``documents(doc_id, text, ...)`` table. Everything in the pipeline path is
 pure ``pyspark.sql.functions`` (JVM-side, whole-stage codegen) — the only
-Python left is the MinHash band-key pandas UDF (Arrow-batched numpy); the
-oracle equivalents live in __spark_entry__.py.
+Python left is the MinHash band-key and SimHash pandas UDFs (Arrow-batched
+numpy); the oracle equivalents live in __spark_entry__.py.
 """
 
 from __future__ import annotations
-
-import zlib
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, LongType
+from pyspark.sql.types import LongType
 
 from biblib_spark.functions.minhash import make_band_keys_udf
 from biblib_spark.operators.candidates import self_join_pairs
@@ -46,25 +44,6 @@ def _fan_out(docs: DataFrame) -> DataFrame:
 
 def token_count_col(text: Column) -> Column:
     return F.size(F.split(F.trim(text), r"\s+"))
-
-
-def exact_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact duplicate groups by md5 of raw text (hash-groupBy — one shuffle,
-    partial aggregation map-side)."""
-    return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("text_hash"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("rep_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
-def normalized_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Duplicate groups after lowercase/alnum normalization."""
-    return (
-        docs.groupBy(F.md5(norm_text_col(F.col(text_col))).alias("norm_hash"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("rep_id"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def doc_stats(docs: DataFrame) -> DataFrame:
@@ -101,11 +80,7 @@ def near_dup_pairs_simhash(
     inside codegen. Scales exactly like the MinHash tier: one shuffle on the
     quarter keys, no all-pairs anywhere.
     """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
     from biblib_spark.functions.simhash import simhash64_batch
-    from biblib_spark.operators.candidates import self_join_pairs
 
     @pandas_udf(LongType())
     def _sh(texts: pd.Series) -> pd.Series:
@@ -244,29 +219,11 @@ def elect_lang_representative(docs: DataFrame) -> DataFrame:
     )
 
 
-@pandas_udf(DoubleType())
-def _jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Exact 3-gram Jaccard (scalar Python variant, kept for library users
-    and as the parity reference; the pipeline path uses the JVM
-    ``_gram_set_col`` expression below — same semantics, codegen speed)."""
-
-    def sh(t: object) -> set[str]:
-        if not isinstance(t, str) or len(t) < 3:
-            return {t} if isinstance(t, str) and t else set()
-        return {t[i : i + 3] for i in range(len(t) - 2)}
-
-    out = []
-    for x, y in zip(a, b):
-        sa, sb = sh(x), sh(y)
-        u = len(sa | sb)
-        out.append(len(sa & sb) / u if u else 0.0)
-    return pd.Series(out, dtype="float64")
-
-
 def _gram_set_col(nt: str) -> Column:
     """Distinct char-3-gram array of column ``nt``, entirely JVM-side.
-    Mirrors ``_jaccard_udf``'s shingling: len>=3 -> all 3-gram windows;
-    0 < len < 3 -> the whole string as one gram; empty/null -> empty array."""
+    Shingling rule: a string of length >= 3 yields every 3-char window; a
+    shorter non-empty string is one gram on its own; empty or NULL yields an
+    empty array."""
     return F.expr(
         f"CASE WHEN length({nt}) >= 3 THEN"
         f" array_distinct(transform(sequence(1, length({nt}) - 2),"
@@ -323,7 +280,7 @@ def near_dup_pairs_minhash(
     fa = feat.select(F.col("rid").alias("a_rid"), F.col("grams").alias("a_grams"))
     fb = feat.select(F.col("rid").alias("b_rid"), F.col("grams").alias("b_grams"))
     # verify is pure codegen: set intersect/union over the precomputed gram
-    # arrays (the Python _jaccard_udf stays only as the parity reference)
+    # arrays
     jac = F.size(F.array_intersect("a_grams", "b_grams")) / F.size(
         F.array_union("a_grams", "b_grams")
     )
@@ -335,26 +292,6 @@ def near_dup_pairs_minhash(
     return j.filter(F.col("jaccard") >= threshold).select(
         "a", "b", F.round("jaccard", 4).alias("jaccard")
     )
-
-
-@pandas_udf(LongType())
-def fingerprint_udf(texts: pd.Series) -> pd.Series:
-    """Deterministic 63-bit document fingerprint (crc32 rolling combine).
-
-    Python variant kept for library users; the pipeline/driver path uses the
-    JVM ``fingerprint_col`` below (same chunked structure, codegen speed,
-    ANSI-SQL-expressible for the oracle)."""
-
-    def _one(t: object) -> int:
-        if not isinstance(t, str):
-            return 0
-        h = 17
-        data = t.encode("utf-8")
-        for i in range(0, len(data), 64):
-            h = (h * 1099511628211 + zlib.crc32(data[i : i + 64])) & ((1 << 63) - 1)
-        return h
-
-    return texts.map(_one)
 
 
 def fingerprint_col(text: Column, chunk: int = 64) -> Column:

@@ -28,6 +28,9 @@ from biblib_spark.kernels.similarity import jaro_batch
 
 DOI_TITLE_SIMILARITY_THRESHOLD = 0.85  # dedupe.rs:141
 NO_DOI_TITLE_SIMILARITY_THRESHOLD = 0.93  # dedupe.rs:142
+#: C4: the shorter title must have at least this many chars to count as
+#: contained in the longer one
+CONTAINMENT_MIN_LEN = 20
 
 _FEATURE_COLS = [
     "rid",
@@ -178,10 +181,7 @@ def _arm_predicate(sim, m: dict, both_doi, doi_eq):
 
 
 def verify_pairs(
-    pairs: DataFrame,
-    feat: DataFrame,
-    containment: bool = False,
-    containment_min_len: int = 20,
+    pairs: DataFrame, feat: DataFrame, containment: bool = False
 ) -> DataFrame:
     """Candidate pairs (a, b) -> verified duplicate pairs (a, b).
 
@@ -273,7 +273,7 @@ def verify_pairs(
     )
     cols = [F.col("a"), F.col("b"), sim.alias("sim")]
     if containment:
-        contained = _title_contained(containment_min_len)
+        contained = _title_contained(CONTAINMENT_MIN_LEN)
         cols.append(contained.alias("title_contained"))
         surv = (
             j1.filter(gate | contained)
@@ -297,7 +297,7 @@ def verify_pairs(
 
 
 def containment_pairs(
-    pairs: DataFrame, feat: DataFrame, min_len: int = 20
+    pairs: DataFrame, feat: DataFrame, min_len: int = CONTAINMENT_MIN_LEN
 ) -> DataFrame:
     """Pairs passing ONLY the C4 containment arm — pure JVM expressions
     end-to-end (no similarity UDF), so the whole check stays in codegen."""

@@ -141,7 +141,6 @@ def run_stage(
     path: str,
     build: Callable[[], DataFrame],
     lineage: dict | None = None,
-    verify_on_resume: bool = True,
     on_corrupt: str = "raise",
 ) -> DataFrame:
     """Build-or-resume one stage.
@@ -149,20 +148,14 @@ def run_stage(
     Resume requires (1) the marker exists, (2) its recorded lineage equals the
     lineage of the CURRENT input — resuming a work_dir against changed input
     rebuilds instead of returning stale results — and (3) per-partition
-    counters verify (``verify_on_resume``). A verification failure raises
-    ``StageIntegrityError`` by default (``on_corrupt='rebuild'`` rebuilds).
+    counters verify. A verification failure raises ``StageIntegrityError``
+    by default (``on_corrupt='rebuild'`` rebuilds).
     """
-    if stage_done(path):
-        marker = read_marker(path)
-        if marker.get("lineage", {}) != (lineage or {}):
-            write_stage(build(), path, lineage)
-        elif verify_on_resume:
-            problems = verify_stage(spark, path)
-            if problems:
-                if on_corrupt == "rebuild":
-                    write_stage(build(), path, lineage)
-                else:
-                    raise StageIntegrityError(f"{path}: {'; '.join(problems)}")
-    else:
+    lineage = lineage or {}
+    if not stage_done(path) or read_marker(path).get("lineage", {}) != lineage:
+        write_stage(build(), path, lineage)
+    elif problems := verify_stage(spark, path):
+        if on_corrupt != "rebuild":
+            raise StageIntegrityError(f"{path}: {'; '.join(problems)}")
         write_stage(build(), path, lineage)
     return spark.read.parquet(path)

@@ -352,7 +352,6 @@ def run_stage_ice(
     table_dir: str,
     build,
     lineage: dict | None = None,
-    verify_on_resume: bool = True,
     on_corrupt: str = "raise",
 ) -> DataFrame:
     """Build-or-resume one pipeline stage with an IceTable as the checkpoint
@@ -371,19 +370,13 @@ def run_stage_ice(
     """
     table = IceTable(table_dir)
     lineage = lineage or {}
-    if table.current_version() > 0:
-        snap = table.snapshot()
-        if snap.get("summary", {}).get("lineage") != lineage:
-            table.overwrite(build(), summary={"lineage": lineage})
-        elif verify_on_resume:
-            problems = table.verify(spark)
-            if problems:
-                if on_corrupt == "rebuild":
-                    table.overwrite(build(), summary={"lineage": lineage})
-                else:
-                    raise SnapshotIntegrityError(
-                        f"{table_dir}: {'; '.join(problems)}"
-                    )
-    else:
+    if (
+        table.current_version() == 0
+        or table.snapshot().get("summary", {}).get("lineage") != lineage
+    ):
+        table.overwrite(build(), summary={"lineage": lineage})
+    elif problems := table.verify(spark):
+        if on_corrupt != "rebuild":
+            raise SnapshotIntegrityError(f"{table_dir}: {'; '.join(problems)}")
         table.overwrite(build(), summary={"lineage": lineage})
     return table.read(spark)

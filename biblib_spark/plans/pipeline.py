@@ -2,9 +2,10 @@
 
 Stages checkpoint to ``work_dir`` with _STAGE_OK markers (C8); re-running
 with the same work_dir resumes after the last completed stage. The lineage
-entry records an order-insensitive aggregate of the input content hashes,
-the DedupConfig and the source column, so a resume against different input
-or a different config is detectable.
+entry records an order-insensitive aggregate of per-row hashes over the
+input columns the feature kernel reads, the DedupConfig and the source
+column, so a resume against different input or a different config is
+detectable.
 """
 
 from __future__ import annotations
@@ -27,14 +28,18 @@ from biblib_spark.operators.dedupe import dedupe_records  # noqa: F401
 from biblib_spark.sources.parse import parse_with_diagnostics  # noqa: F401
 
 
-def _input_fingerprint(corpus: DataFrame) -> dict:
+def _input_fingerprint(corpus: DataFrame, source_col: str | None = None) -> dict:
+    """Row count + a sum of per-row hashes over exactly the columns
+    ``features_from_corpus`` reads (rids come from ``row_id``, sources from
+    ``source_col``)."""
+    cols = ["row_id", "content"] + ([source_col] if source_col else [])
     row = corpus.select(
         F.count(F.lit(1)).alias("n"),
-        # order-insensitive: xor of per-row 64-bit content hashes (xor, not
-        # sum — sum overflows long under ANSI mode)
-        F.expr("bit_xor(xxhash64(content))").alias("hxor"),
+        # order-insensitive; decimal(38,0) because a bit_xor cancels
+        # identical rows and a long sum wraps or raises
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("hsum"),
     ).collect()[0]
-    return {"input_rows": row["n"], "input_hash_xor": int(row["hxor"] or 0)}
+    return {"input_rows": row["n"], "input_hash_sum": int(row["hsum"] or 0)}
 
 
 def run_pipeline(
@@ -69,7 +74,7 @@ def run_pipeline(
     """
     cfg = cfg or DedupConfig()
     lineage = {
-        **_input_fingerprint(corpus),
+        **_input_fingerprint(corpus, source_col),
         "cfg": dataclasses.asdict(cfg),
         "source_col": source_col,
     }

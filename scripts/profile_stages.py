@@ -69,10 +69,7 @@ def main() -> None:
         pairs = mat("candidates", candidate_pairs(feat, cfg))
         edges = mat(
             "verify",
-            verify_pairs(
-                pairs, feat, containment=cfg.containment_verify,
-                containment_min_len=cfg.containment_min_len,
-            ),
+            verify_pairs(pairs, feat, containment=cfg.containment_verify),
         )
         # assign_clusters runs the CC loop eagerly while the plan is BUILT, so
         # time the call itself, then the final join materialization

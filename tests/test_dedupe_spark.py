@@ -175,9 +175,7 @@ def test_identity_tier_rescues_lsh_miss(spark):
     key over the whole signature, so ANY shingle diff kills it), simhash and
     prefix tiers are off; only the identity tier can surface the pair, and the
     reference predicate then verifies it."""
-    starved = DedupConfig(
-        bands=1, simhash_enabled=False, prefix_tier=False, exact_title_tier=False
-    )
+    starved = DedupConfig(bands=1, simhash_enabled=False, prefix_tier=False)
 
     def rec(rid, title, pmid=None, accn=None):
         r = _rec(rid, title, journal="J Renal", volume="12", year=2001)

@@ -5,7 +5,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from biblib_spark.corpus import make_corpus, n_variants, payload_text
+from biblib_spark.kernels.citation import empty_citation
 from biblib_spark.kernels.detect import detect_format
+from biblib_spark.schema import CITATION_SCHEMA
 from biblib_spark.sources.parse import parse_corpus, parse_corpus_quarantine
 
 
@@ -15,6 +17,12 @@ def test_corpus_deterministic():
     assert detect_format(a) == "RIS"
     b = payload_text(3, 6, seed=42)
     assert detect_format(b) == "PubMed"
+
+
+def test_citation_keys_match_schema():
+    """Kernels emit ``empty_citation()``'s keys; the Spark struct must list
+    the same fields in the same order."""
+    assert list(empty_citation()) == CITATION_SCHEMA.fieldNames()
 
 
 def test_parse_corpus_counts_and_schema(spark):

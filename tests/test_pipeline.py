@@ -147,6 +147,31 @@ def test_resume_with_changed_input_rebuilds(spark):
         assert n2 != n1  # rebuilt from the new corpus, not resumed
         marker = read_marker(os.path.join(work, "features"))
         assert marker["lineage"]["input_rows"] == 90
+
+        # same row count each time: a duplicated-payload swap (an xor of
+        # content hashes cancels both to 0) and a row_id renumbering (row_id
+        # unhashed) must still rebuild
+        from biblib_spark.sources.parse import parse_payload
+
+        a, b = (
+            make_corpus(spark, 1, records_per_payload=n, seed=5).first().content
+            for n in (3, 5)
+        )
+        per_payload = {c: len(parse_payload(c)[1]) for c in (a, b)}
+        assert per_payload[a] != per_payload[b]
+        for rows in (
+            [(0, a), (1, a)],
+            [(0, b), (1, b)],
+            [(0, a), (1, b)],
+            [(7, a), (3, b)],
+        ):
+            corpus = spark.createDataFrame(rows, "row_id long, content string")
+            got = run_pipeline(spark, corpus, work).select("rid").collect()
+            assert {r.rid for r in got} == {
+                row_id * (1 << 20) + i
+                for row_id, content in rows
+                for i in range(per_payload[content])
+            }
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

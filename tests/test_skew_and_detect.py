@@ -233,6 +233,7 @@ def test_flat_candidate_keys_single_scan_identical(spark):
     from pyspark.sql import types as T
 
     from biblib_spark.operators.candidates import (
+        AFFIX_LEN,
         IDENTITY_TIERS,
         affix_keyed,
         flat_candidate_keys,
@@ -274,8 +275,8 @@ def test_flat_candidate_keys_single_scan_identical(spark):
         feat.select("year_key", F.explode("simhash_keys").alias("k"), "rid").select(
             "year_key", F.xxhash64(F.lit("sim"), F.col("k")).alias("bkey"), "rid"
         ),
-        affix_keyed(feat, "prefix", cfg.prefix_len),
-        affix_keyed(feat, "suffix", cfg.prefix_len),
+        affix_keyed(feat, "prefix", AFFIX_LEN),
+        affix_keyed(feat, "suffix", AFFIX_LEN),
     ]
     union = tiers[0]
     for t in tiers[1:]:
