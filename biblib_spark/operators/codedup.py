@@ -522,7 +522,8 @@ def code_dup_edges(feat: DataFrame) -> DataFrame:
 def clusters_from_edges(feat: DataFrame, edges: DataFrame) -> DataFrame:
     """(row_id, cluster_id, cluster_size) from features + verified edges.
 
-    cluster_id = min row_id of the component (C6 min-label convention);
+    cluster_id = min row_id of the component (C6: the citation arm's
+    level-wise union-find, operators/components.py);
     singletons pass through with their own id (M11). Split out so the
     checkpointed pipeline (plans/code_pipeline.py) can resume from a
     persisted edge stage without re-running the tiers.

@@ -6,86 +6,113 @@ one connected component: CC reproduces 100% of reference dup-pairs (recall
 1.0 >= 0.99); CC may merge additional near-pairs, which the stated metric
 (dup-pair recall) does not penalize — SURVEY.md §2.8 C6.
 
-Algorithm: iterative min-label propagation. label(v) starts at v; each round
-label(v) := min(label(v), min over neighbors). Labels are monotonically
-non-increasing and bounded, so the global sum of labels is a convergence
-certificate: one cheap agg per round, no change-count join. Rounds ~ cluster
-diameter; duplicate clusters are star/clique shaped (diameter <= ~3).
-``localCheckpoint`` per round truncates lineage (SURVEY.md §4).
+Algorithm: level-wise partition-local union-find (BTS, ICDE 2024). One
+*level* is one pass over an edge list:
 
-Job-count discipline (the loop's cost at scale is scheduling + checkpoint
-latency, not compute): round 1 is FREE — folded into the label-init
-aggregation (label0(v) = min(v, min neighbor) instead of distinct-vertices),
-and convergence is checked after every round, so a diameter-2 component
-(every star, most cliques) finishes with init + one confirm round where the
-round-1 code paid a distinct + four propagation rounds + two certificates.
+1. every edge partition runs a numpy union-find over its own edges and emits
+   ``(rid, root)`` for each vertex it holds, ``root`` being the min rid of
+   the vertex's component *within that partition*;
+2. one ``groupBy("rid")`` gives ``label = min(root)`` and the set of roots,
+   materialized by one eager ``localCheckpoint``. The same action fills an
+   ``Observation`` with ``cross = sum(size(roots) - 1)``.
+
+``cross == 0`` is the fixpoint proof: no vertex joins two partitions'
+components with different roots, so every edge's endpoints share one root,
+the root is constant over each global component and, since the component's
+min rid is its own root everywhere, equals that min rid. Otherwise the
+contracted graph ``(label, root)``, ``root != label``, links exactly the
+local components that share a vertex; the next level solves it, and each
+vertex takes ``coalesce(next level's cluster_id of its label, label)``.
+Only ``cross == 0`` versus ``> 0`` is read, so a speculative or retried
+task counted twice cannot change the decision. ``max_iter`` bounds levels.
+
+A level costs one Python pass, one shuffle and one checkpoint — no
+``collect()`` and no per-round join. Partition-local union-find finishes a
+component held by one partition in one level; later levels only see the
+contracted cross-partition graph, which after the first aggregation is
+small enough for AQE to coalesce into few partitions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+_FOREST_SCHEMA = pa.schema([("rid", pa.int64()), ("root", pa.int64())])
+
+
+def _local_forest(batches):
+    """mapInArrow body: union-find over one partition's (a, b) edges ->
+    (rid, root) per vertex, root = min rid of its local component."""
+    batches = list(batches)
+    if not batches:
+        return
+    edges = pa.Table.from_batches(batches)
+    a, b = edges.column(0).to_numpy(), edges.column(1).to_numpy()
+    # vertices sorted ascending, so the min index of a set is its min rid
+    verts, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = idx[: len(a)], idx[len(a) :]
+    parent = np.arange(len(verts))
+    while True:
+        ra, rb = parent[ia], parent[ib]
+        if np.array_equal(ra, rb):
+            break
+        # hook every larger root under the smallest root it shares an edge with
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        # pointer jumping until every vertex points at its root
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(verts), pa.array(verts[parent])], schema=_FOREST_SCHEMA
+    )
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Edges (a, b) -> (rid, cluster_id) for every vertex in the edge list.
 
     cluster_id = min rid of the component. Raises RuntimeError when the
-    labels have not reached a fixpoint after ``max_iter`` rounds.
+    contracted graph is still non-empty after ``max_iter`` levels.
     """
-    sym = edges.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    sym = sym.localCheckpoint(eager=True)
-
-    def _cert(lbl):
-        # decimal(38,0) sum: rids reach ~2^63 at 10^12-record scale, where a
-        # LongType sum would wrap silently (non-ANSI) and could fake a fixpoint
-        return lbl.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))
-        ).collect()[0][0]
-
-    # label init IS propagation round 1: every vertex appears as src (both
-    # edge directions are present), so min(self, min neighbor) needs only the
-    # one aggregation shuffle the vertex-distinct would have cost anyway
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("_mn"))
-        .select(F.col("src").alias("rid"), F.least("src", "_mn").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = _cert(labels)
-
-    def one_round(lbl):
-        # each vertex receives its neighbors' current labels
-        msgs = sym.join(lbl, sym["dst"] == lbl["rid"]).select(
-            F.col("src").alias("rid"), "label"
-        )
-        return (
-            lbl.select("rid", "label")
-            .unionByName(msgs)
-            .groupBy("rid")
-            .agg(F.min("label").alias("label"))
-        )
-
+    cur = edges.select(F.col("a").cast("long"), F.col("b").cast("long"))
+    levels = []
     for _ in range(max_iter):
-        labels = one_round(labels).localCheckpoint(eager=True)
-        cur_sum = _cert(labels)
-        if cur_sum == prev_sum:
+        obs = Observation()
+        lvl = (
+            cur.mapInArrow(_local_forest, "rid long, root long")
+            .groupBy("rid")
+            .agg(F.min("root").alias("label"), F.collect_set("root").alias("roots"))
+            .observe(obs, F.sum(F.size("roots") - 1).alias("cross"))
+            .localCheckpoint(eager=True)
+        )
+        levels.append(lvl.select("rid", "label"))
+        if not obs.get["cross"]:
             break
-        prev_sum = cur_sum
+        cur = lvl.select(
+            F.col("label").alias("a"), F.explode("roots").alias("b")
+        ).filter("a != b")
     else:
-        # labels short of the fixpoint would split components silently
+        # labels of an unfinished level would split components silently
         raise RuntimeError(
             f"connected_components: no fixpoint within max_iter={max_iter} "
-            "rounds (a component's diameter exceeds it)"
+            "levels (the contracted cross-partition graph is still non-empty)"
         )
 
-    return labels.select("rid", F.col("label").alias("cluster_id"))
+    out = levels.pop().select("rid", F.col("label").alias("cluster_id"))
+    for lvl in reversed(levels):
+        out = lvl.join(
+            out.withColumnRenamed("rid", "label"), "label", "left"
+        ).select("rid", F.coalesce("cluster_id", "label").alias("cluster_id"))
+    return out
 
 
 def assign_clusters(all_rids: DataFrame, edges: DataFrame) -> DataFrame:
-    """(rid) x edges -> (rid, cluster_id); singletons keep their own rid (M11)."""
+    """(rid, ...) x edges -> (rid, ..., cluster_id): every column of
+    ``all_rids`` is kept; singletons keep their own rid (M11)."""
     cc = connected_components(edges)
     return (
         all_rids.join(cc, "rid", "left")

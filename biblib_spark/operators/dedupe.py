@@ -6,7 +6,7 @@ src/dedupe.rs:403-500, re-expressed as 6 Spark stages):
   features (M3/N1-N5)           one mapInArrow pass (kernels/features.py)
   -> candidates (C1-C5)         tiered equi-joins within year blocks
   -> verify (M4-M8)             SQL field matches + jaro/jw pandas UDF
-  -> connected components (C6)  min-label propagation
+  -> connected components (C6)  level-wise partition-local union-find
   -> elect representative (M10) one window
   -> emit (rid, cluster_id, is_unique)
 
@@ -95,9 +95,9 @@ def dedupe_features(feat: DataFrame, cfg: DedupConfig | None = None) -> DataFram
     cfg = cfg or DedupConfig()
     pairs = candidate_pairs(feat, cfg)
     dup_edges = verify_pairs(pairs, feat, containment=cfg.containment_verify)
-    clustered = assign_clusters(feat.select("rid"), dup_edges)
-    enriched = clustered.join(
-        feat.select("rid", "source", "abstract_text", "doi"), "rid"
+    # the columns election reads ride through assign_clusters' rid join
+    enriched = assign_clusters(
+        feat.select("rid", "source", "abstract_text", "doi"), dup_edges
     )
     elected = elect_representatives(enriched, cfg.source_preferences)
     return elected.select("rid", "cluster_id", "is_unique", "source")

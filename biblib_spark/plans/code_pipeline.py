@@ -2,10 +2,13 @@
 
 The north_rule's checkpoint discipline applied to the code arm: every stage
 writes parquet + a ``_STAGE_OK`` marker with per-partition row counts and
-content-hash XORs (plans/checkpoint.py, C8), so a killed job re-submitted
-with the same ``work_dir`` resumes after the last completed stage, a resume
-against *different* input rebuilds, and a stage whose files were tampered
-with or partially lost is refused.
+content hashes (plans/checkpoint.py, C8), so a killed job re-submitted
+with the same ``work_dir`` resumes after the last completed stage, and a
+stage whose files were tampered with or partially lost is refused. The
+lineage holds the citation pipeline's input fingerprint
+(plans/pipeline.py::_input_fingerprint) over ``(row_id, lang, content)``,
+the columns ``code_features`` reads, so a resume against *different* input
+rebuilds.
 
 Stage split rationale (what a resume actually saves at 10^12 files):
 
@@ -14,7 +17,7 @@ Stage split rationale (what a resume actually saves at 10^12 files):
   repeat; its output is slim (rid, lang, sha, norm_hash, ctoks).
 - ``edges``: all four candidate tiers + JVM verifies — the shuffle-heavy
   stage; output is a tiny (a, b) long-pair table.
-- ``clusters``: iterative connected components + size join.
+- ``clusters``: connected components (level-wise union-find) + size join.
 
 Reference parity: biblib has no resume (batch library, src/dedupe.rs); the
 stage/marker discipline mirrors the citation arm (plans/pipeline.py) per the
@@ -26,7 +29,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from biblib_spark.operators.codedup import (
     clusters_from_edges,
@@ -34,15 +36,7 @@ from biblib_spark.operators.codedup import (
     code_features,
 )
 from biblib_spark.plans.checkpoint import run_stage
-
-
-def _input_fingerprint(files: DataFrame) -> dict:
-    row = files.select(
-        F.count(F.lit(1)).alias("n"),
-        # order-insensitive: xor of per-row 64-bit content hashes
-        F.expr("bit_xor(xxhash64(content))").alias("hxor"),
-    ).collect()[0]
-    return {"input_rows": row["n"], "input_hash_xor": int(row["hxor"] or 0)}
+from biblib_spark.plans.pipeline import _input_fingerprint
 
 
 def run_code_pipeline(
@@ -53,7 +47,8 @@ def run_code_pipeline(
     ``files`` must have the input_hint shape
     ``(row_id, repo, path, commit, lang, content)``.
     """
-    lineage = _input_fingerprint(files)
+    # the columns code_features reads
+    lineage = _input_fingerprint(files, ["row_id", "lang", "content"])
 
     feat = run_stage(
         spark,

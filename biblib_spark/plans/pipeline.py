@@ -28,11 +28,10 @@ from biblib_spark.operators.dedupe import dedupe_records  # noqa: F401
 from biblib_spark.sources.parse import parse_with_diagnostics  # noqa: F401
 
 
-def _input_fingerprint(corpus: DataFrame, source_col: str | None = None) -> dict:
-    """Row count + a sum of per-row hashes over exactly the columns
-    ``features_from_corpus`` reads (rids come from ``row_id``, sources from
-    ``source_col``)."""
-    cols = ["row_id", "content"] + ([source_col] if source_col else [])
+def _input_fingerprint(corpus: DataFrame, cols: list[str]) -> dict:
+    """Row count + a sum of per-row hashes over ``cols``, which must be
+    exactly the input columns the first stage's kernel reads. Shared by the
+    citation and code pipelines."""
     row = corpus.select(
         F.count(F.lit(1)).alias("n"),
         # order-insensitive; decimal(38,0) because a bit_xor cancels
@@ -74,7 +73,10 @@ def run_pipeline(
     """
     cfg = cfg or DedupConfig()
     lineage = {
-        **_input_fingerprint(corpus, source_col),
+        # rids come from row_id, sources from source_col
+        **_input_fingerprint(
+            corpus, ["row_id", "content"] + ([source_col] if source_col else [])
+        ),
         "cfg": dataclasses.asdict(cfg),
         "source_col": source_col,
     }

@@ -24,7 +24,7 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         # one wave per core: this pipeline runs MANY small-to-medium shuffle
-        # stages (tier union, verify joins, CC rounds), where per-task
+        # stages (tier union, verify joins, CC levels), where per-task
         # dispatch latency outweighs straggler smoothing; AQE re-splits any
         # stage that actually skews. On a real cluster with deep stages,
         # raise toward 2-3x total cores.

@@ -196,13 +196,13 @@ def merge_cluster_map(edges_pdf, map_path: str) -> None:
 def rebuild_cluster_map(spark, edge_log, map_path: str) -> None:
     """Distributed (rid, cluster_id) map from the accumulated edge log.
 
-    Runs the batch engine's min-label connected components
-    (operators/components.py — the same C6 operator the batch pipeline
-    uses) over every edge ever emitted, entirely executor-side, and
-    atomically replaces the map parquet. cluster_id = min rid of the
-    component, identical to the union-find's min-root, so transitive
-    cross-batch links (9-5, 5-1 across different batches) resolve to the
-    oldest rid. Cost scales with the edge log, not with driver memory —
+    Runs the batch engine's connected components (operators/components.py
+    — the same C6 operator the batch pipeline uses: partition-local
+    union-find per level, one checkpoint per level) over every edge ever
+    emitted, entirely executor-side, and atomically replaces the map
+    parquet. cluster_id = min rid of the component, identical to the
+    driver-side union-find's min-root, so transitive cross-batch links
+    (9-5, 5-1 across different batches) resolve to the oldest rid. Cost scales with the edge log, not with driver memory —
     at 100 TB the log is a partitioned table and this is an ordinary
     distributed job, where the old driver-side fold was a single-process
     bottleneck (round-3 verdict "What's wrong #2")."""

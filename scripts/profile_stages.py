@@ -71,16 +71,16 @@ def main() -> None:
             "verify",
             verify_pairs(pairs, feat, containment=cfg.containment_verify),
         )
-        # assign_clusters runs the CC loop eagerly while the plan is BUILT, so
-        # time the call itself, then the final join materialization
+        # assign_clusters checkpoints each union-find level eagerly while the
+        # plan is BUILT, so time the call itself, then the final join
+        # materialization
         t0 = time.time()
-        clustered_df = assign_clusters(feat.select("rid"), edges)
+        clustered_df = assign_clusters(
+            feat.select("rid", "source", "abstract_text", "doi"), edges
+        )
         stages["cc_loop"] = round(time.time() - t0, 3)
         clustered = mat("components_join", clustered_df)
-        enriched = clustered.join(
-            feat.select("rid", "source", "abstract_text", "doi"), "rid"
-        )
-        mat("election", elect_representatives(enriched, cfg.source_preferences))
+        mat("election", elect_representatives(clustered, cfg.source_preferences))
         all_totals.append(round(time.time() - t_all, 3))
         all_stages.append(stages)
         for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():

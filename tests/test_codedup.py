@@ -312,5 +312,29 @@ def test_code_pipeline_changed_input_rebuilds(spark):
         assert n2 != n1  # rebuilt from the new corpus, not resumed
         marker = read_marker(os.path.join(work, "features"))
         assert marker["lineage"]["input_rows"] == n2
+
+        # same row count each time: a duplicated-file swap (an xor of content
+        # hashes cancels both to 0) and a row_id renumbering (row_id
+        # unhashed) must still rebuild
+        from biblib_spark.schema import CORPUS_SCHEMA
+
+        a = "def area(r):\n    return 3.14159 * r * r\n"
+        b = "def greet(name):\n    print('hello', name)\n"
+
+        def files(rows):
+            return spark.createDataFrame(
+                [(rid, "repo", f"f{rid}.py", "c0", "python", c) for rid, c in rows],
+                CORPUS_SCHEMA,
+            )
+
+        for rows in ([(0, a), (1, a)], [(0, b), (1, b)]):
+            run_code_pipeline(spark, files(rows), work).count()
+            shas = spark.read.parquet(os.path.join(work, "features")).select("sha")
+            assert {r.sha for r in shas.collect()} == {
+                hashlib.sha256(rows[0][1].encode()).hexdigest()
+            }
+        for rows in ([(0, a), (1, b)], [(7, a), (3, b)]):
+            got = run_code_pipeline(spark, files(rows), work).collect()
+            assert {r.row_id for r in got} == {rid for rid, _c in rows}
     finally:
         shutil.rmtree(work, ignore_errors=True)

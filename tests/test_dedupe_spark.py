@@ -310,14 +310,87 @@ def test_rid_overflow_raises_instead_of_colliding(spark):
 
 
 def test_connected_components_raises_without_fixpoint(spark):
-    """A 12-vertex path needs more propagation rounds than max_iter=2: CC
-    must raise instead of returning unconverged (split) labels."""
+    """A 12-vertex path with one edge per partition leaves every inner vertex
+    in two partitions' forests after level 1, so it needs more levels than
+    max_iter=1: CC must raise instead of returning unfinished (split)
+    labels."""
     from biblib_spark.operators.components import connected_components
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(11)], "a long, b long"
-    )
-    with pytest.raises(RuntimeError, match="max_iter=2"):
-        connected_components(edges, max_iter=2)
+    rows = [(i, i + 1) for i in range(11)]
+    edges = spark.sparkContext.parallelize(rows, len(rows)).toDF("a long, b long")
+    assert edges.rdd.getNumPartitions() == len(rows)
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
     labels = {r.cluster_id for r in connected_components(edges).collect()}
     assert labels == {0}
+
+
+def _union_find_labels(edges):
+    """Independent reference: sequential union-find, min-rid roots."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
+def _cc_graphs():
+    import random
+
+    rng = random.Random(7)
+    return {
+        "path": [(i, i + 1) for i in range(30)],
+        # rids fall along the row order, and each edge is written (hi, lo)
+        "path_reversed": [(30 - i, 29 - i) for i in range(30)],
+        "stars": [(0, i) for i in range(1, 20)]
+        + [(120, i) for i in range(100, 120)],
+        "cliques": [
+            (o + i, o + j) for o in (0, 50) for i in range(8) for j in range(8)
+            if i < j
+        ],
+        "random_sparse": [(rng.randrange(400), rng.randrange(400)) for _ in range(300)],
+        "duplicate_edges": [(3, 4), (4, 3), (3, 4), (4, 5), (4, 5), (9, 8), (8, 9)],
+        "self_loops": [(5, 5), (5, 6), (7, 7), (6, 6)],
+        "empty": [],
+    }
+
+
+@pytest.mark.parametrize("partitions", [1, 4, 16, 64])
+def test_connected_components_matches_union_find(spark, partitions):
+    """Row-for-row agreement with a sequential union-find on every graph
+    family; 1..64 input partitions spread components over 1..many levels."""
+    from biblib_spark.operators.components import connected_components
+
+    for name, rows in _cc_graphs().items():
+        edges = spark.createDataFrame(rows, "a long, b long").repartition(partitions)
+        got = connected_components(edges).collect()
+        assert len(got) == len({r.rid for r in got}), name
+        assert {r.rid: r.cluster_id for r in got} == _union_find_labels(rows), name
+
+
+def test_connected_components_job_count(spark):
+    """A 16-edge path over 4 partitions needs two union-find levels; each is
+    one eager checkpoint (AQE: a map-stage job + a result job) and nothing
+    else — no per-round collect() or certificate job."""
+    from biblib_spark.operators.components import connected_components
+
+    rows = [(i, i + 1) for i in range(16)]
+    edges = spark.sparkContext.parallelize(rows, 4).toDF("a long, b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_job_count", "connected_components job count")
+    try:
+        cc = connected_components(edges)
+        jobs = sc.statusTracker().getJobIdsForGroup("cc_job_count")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 4, f"{len(jobs)} jobs"
+    assert {r.cluster_id for r in cc.collect()} == {0}
